@@ -4,8 +4,9 @@ The reference job runs with `events_out_of_order_policy = "Adjust"`,
 30 s reorder buffer and 60 s late-arrival tolerance
 (reference terraform/main-example.tf:133-136): an out-of-order event's
 timestamp is CLAMPED forward to the stream's high-water mark, and events
-later than the tolerance are dropped. Structured Streaming's watermark
-covers the drop half natively (`withWatermark`, streaming/pipeline.py);
+later than the tolerance are dropped. The streaming fan-out applies the
+drop half per micro-batch against its carried max event time
+(streaming/pipeline.py:multi_sink_batch_writer);
 the clamp half is a projection Spark doesn't ship — expressed here as a
 running-max window so both halves are batch-testable against a SQL
 oracle.

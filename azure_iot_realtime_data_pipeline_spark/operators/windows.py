@@ -14,8 +14,9 @@ Scale notes:
   (linear scale-out); ``key=None`` reproduces the reference-faithful
   global window and documents the cost.
 - Batch form is a Catalyst RANGE window frame (sort within partition, no
-  extra shuffle beyond the partitionBy exchange). Streaming form lives in
-  streaming/anomaly_state.py with an identical spec.
+  extra shuffle beyond the partitionBy exchange). The streaming pipeline
+  runs this same operator per micro-batch over a retained tail
+  (streaming/pipeline.py:multi_sink_batch_writer).
 - The frame key is floor(epoch seconds) so batch Spark, DuckDB oracles,
   and the streaming deque all agree on window membership.
 """
@@ -107,7 +108,7 @@ def spike_dip_score(
 
 
 def _extreme_row_per_key(
-    df: DataFrame, key: str, ts_col: str, tiebreak: str, newest: bool
+    df: DataFrame, key: str, ts_col: str, tiebreak: str | None, newest: bool
 ) -> DataFrame:
     """One row per key by (ts, tiebreak) order — as an AGGREGATE, not a
     window. max/min over a struct whose leading fields are the ordering
@@ -116,12 +117,11 @@ def _extreme_row_per_key(
     one partial row per task — a row_number window would sort that
     key's ENTIRE partition in one task. The tiebreak makes the struct
     order total, so the result is deterministic and identical to the
-    old window form (oracle-verified)."""
-    packed = F.struct(
-        F.col(ts_col),
-        F.col(tiebreak),
-        *[F.col(c) for c in df.columns if c not in (key, ts_col, tiebreak)],
-    )
+    old window form (oracle-verified). Without a tiebreak the remaining
+    columns order the struct, which is total over distinct rows."""
+    order = [ts_col] if tiebreak is None else [ts_col, tiebreak]
+    rest = [c for c in df.columns if c not in (key, *order)]
+    packed = F.struct(*[F.col(c) for c in order + rest])
     best = F.max(packed) if newest else F.min(packed)
     agg = df.groupBy(key).agg(best.alias("_row"))
     return agg.select(
@@ -129,14 +129,18 @@ def _extreme_row_per_key(
     ).select(*df.columns)
 
 
-def latest_value_per_key(df: DataFrame, key: str, ts_col: str, tiebreak: str) -> DataFrame:
+def latest_value_per_key(
+    df: DataFrame, key: str, ts_col: str, tiebreak: str | None = None
+) -> DataFrame:
     """E5 dashboard 'current value' cards: newest row per key
     (struct-max aggregate; see `_extreme_row_per_key` for why this is
     not a window)."""
     return _extreme_row_per_key(df, key, ts_col, tiebreak, newest=True)
 
 
-def first_value_per_key(df: DataFrame, key: str, ts_col: str, tiebreak: str) -> DataFrame:
+def first_value_per_key(
+    df: DataFrame, key: str, ts_col: str, tiebreak: str | None = None
+) -> DataFrame:
     """F7 dimension dedup: first-write-wins per key (the PK'd Devices sink,
     reference iot-stream-analytics-query.sql:53-61 + README.MD:161).
     Struct-min aggregate — map-side combine even for hot keys."""

@@ -3,8 +3,11 @@
 Binds the batch-proven operator semantics to `readStream`:
 
 - source.py    — file-replay source of the `events` table (A1 analog)
-- anomaly.py   — stateful spike/dip via applyInPandasWithState (F1/F2)
-- pipeline.py  — watermark + single-pass multi-sink foreachBatch (F3/F4/F5/F7)
+- anomaly.py   — standalone stateful spike/dip via applyInPandasWithState
+                 (F1/F2); the pipeline no longer uses it
+- pipeline.py  — single-pass multi-sink foreachBatch: raw bronze, far-late
+                 drop, batch spike/dip over a retained tail, telemetry and
+                 devices (F1-F5/F7)
 - windows_stream.py — streaming session/tumbling/hopping aggregation
                  (K1-K3 streaming forms, batch-equivalence tested)
 - http_sink.py — chunked, paced HTTP row push + high-watermark commit

@@ -38,8 +38,15 @@ Scale notes:
   `key_col` defaults to per-device, and global mode is an explicit
   constant-key opt-in (SURVEY.md §7 hard part 1).
 - Late rows within the retained window still score correctly (their
-  trailing window is a filter over retained history); rows later than
-  the watermark are dropped upstream by `withWatermark`.
+  trailing window is a filter over retained history). Nothing drops
+  rows later than the watermark: under `GroupStateTimeout.NoTimeout`
+  Spark applies no late-row filter to this operator's input, so a
+  far-late row is scored from whatever history its key retains. The
+  pipeline (streaming/pipeline.py) no longer runs this operator: it
+  scores each micro-batch with the batch operator over a retained tail
+  and drops far-late rows itself. This module stays as the standalone
+  stateful form (tests pin its parity; the benchmark's tracer wraps
+  `make_spike_dip_fn` by name).
 """
 
 from __future__ import annotations

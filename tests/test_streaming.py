@@ -46,6 +46,27 @@ def _run_available_now(stream_df, sink_fn, checkpoint):
     assert not q.isActive
 
 
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
+
+
+def _stage_event_files(spark, out_dir, files):
+    """One replay file per list of (event_id, ts, user_id, value) rows,
+    replayed in list order."""
+    from azure_iot_realtime_data_pipeline_spark.streaming.source import (
+        _write_replay_file,
+    )
+
+    for i, rows in enumerate(files):
+        df = spark.createDataFrame(
+            [(e, ts, u, "telemetry", v, None) for e, ts, u, v in rows], EVENTS_SCHEMA
+        )
+        _write_replay_file(df, out_dir, i)
+    return out_dir
+
+
 def test_replay_source_delivers_all_rows(spark, sf_smoke, replay_dir, tmp_path):
     total = load_table(spark, sf_smoke, "events").count()
     seen = {"rows": 0, "batches": 0}
@@ -113,12 +134,12 @@ def test_streaming_anomaly_state_bounded(spark, replay_dir, tmp_path):
     assert rows  # runs to completion with bounded state
 
 
-def test_multi_sink_fanout(spark, replay_dir, tmp_path):
+def test_multi_sink_fanout(spark, sf_smoke, replay_dir, tmp_path):
     bronze = str(tmp_path / "bronze")
     devices = str(tmp_path / "devices")
     telemetry = str(tmp_path / "telemetry")
     q = run_multi_sink(
-        curated_stream(replay_events(spark, replay_dir), history_size=85),
+        curated_stream(replay_events(spark, replay_dir)),
         bronze,
         devices,
         telemetry,
@@ -127,14 +148,19 @@ def test_multi_sink_fanout(spark, replay_dir, tmp_path):
     )
     q.awaitTermination(300)
 
+    events = load_table(spark, sf_smoke, "events")
     b = spark.read.parquet(bronze)
     d = spark.read.parquet(devices)
     t = spark.read.parquet(telemetry)
-    # bronze is a raw passthrough of the curated stream rows
-    assert b.count() == t.count()
+    # bronze is the raw input (reference sql:49-50): every row, every column
+    assert b.count() == events.count()
+    assert set(events.columns) < set(b.columns)
+    # telemetry holds the on-time rows: the replay is in event-time
+    # order, so that is every row with a device
+    assert t.count() == events.filter(F.col("user_id").isNotNull()).count()
     # dimension: exactly one row per deviceId (PK semantics, F7)
     assert d.groupBy("deviceId").count().filter(F.col("count") > 1).count() == 0
-    assert d.count() == b.select("deviceId").distinct().count()
+    assert d.count() == t.select("deviceId").distinct().count()
     # fact keeps the anomaly flag column, 0/1 only
     flags = {r["Anomaly"] for r in t.select("Anomaly").distinct().collect()}
     assert flags <= {0, 1}
@@ -143,106 +169,140 @@ def test_multi_sink_fanout(spark, replay_dir, tmp_path):
 def test_multi_sink_replay_is_idempotent(spark, sf_smoke, tmp_path):
     """Crash-replay semantics: foreachBatch re-delivers a micro-batch
     after a failure between sink writes; re-running the SAME (batch_id,
-    rows) through the writer must not duplicate rows in any sink."""
-    from azure_iot_realtime_data_pipeline_spark.streaming.pipeline import (
-        multi_sink_batch_writer,
-    )
-
+    rows) through the writer must not duplicate rows in any sink, and
+    re-reads the tail the first attempt read."""
     bronze = str(tmp_path / "b3")
     devices = str(tmp_path / "d3")
     telemetry = str(tmp_path / "t3")
-    batch = (
-        load_table(spark, sf_smoke, "events")
-        .limit(200)
-        .select(
-            F.col("event_id").alias("telemetryId"),
-            F.concat(F.lit("dev-"), F.col("user_id").cast("string")).alias("deviceId"),
-            F.col("ts").alias("enqueuedTime"),
-            "value",
-            F.lit(0.0).alias("Score"),
-            F.lit(0).alias("Anomaly"),
-        )
-    )
-    write = multi_sink_batch_writer(bronze, devices, telemetry)
+    batch = load_table(spark, sf_smoke, "events").orderBy("ts").limit(200)
+    write = multi_sink_batch_writer(bronze, devices, telemetry, str(tmp_path / "tail"))
     write(batch, 7)
     counts1 = [spark.read.parquet(p).count() for p in (bronze, devices, telemetry)]
+    scores1 = spark.read.parquet(telemetry).collect()
     write(batch, 7)  # replay of the same micro-batch
     counts2 = [spark.read.parquet(p).count() for p in (bronze, devices, telemetry)]
     assert counts1 == counts2
+    assert sorted(spark.read.parquet(telemetry).collect()) == sorted(scores1)
     write(batch.limit(50), 8)  # a NEW batch still appends
     assert spark.read.parquet(bronze).count() == counts1[0] + 50
 
 
-def test_multi_sink_restart_soak(spark, sf_oracle, tmp_path):
-    """Replay soak (round-2 verdict item 6): sf0.01 events through the
-    full fan-out with an injected MID-fan-out crash (bronze written,
-    dimension+fact not) and a checkpoint restart. All three sinks must
-    equal the batch oracle row-sets — this exercises batch-id-scoped
-    idempotence under real StreamingQuery replay, not just direct
-    writer re-invocation."""
-    from azure_iot_realtime_data_pipeline_spark.streaming.pipeline import (
-        _write_batch_scoped,
-        multi_sink_batch_writer,
-    )
+def _dense_fleet(spark, sf_dir, seconds=600, seed=7):
+    """A dense `events` table: device 0 sends every second, devices 1-5
+    every few seconds (device 1 in same-second bursts), with spikes, so
+    every micro-batch boundary cuts through live windows."""
+    import datetime as dt
 
-    replay = stage_replay_dir(spark, sf_oracle, str(tmp_path / "replay"), num_files=6)
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    rows = []
+    for sec in range(seconds):
+        users = [0] + [u for u in range(1, 6) if rng.random() < 0.3]
+        users += [1, 1] if 1 in users else []
+        for u in users:
+            v = float(np.round(rng.normal(50.0 + u, 2.0), 2))
+            if rng.random() < 0.03:
+                v = round(v * 3.0, 2)
+            ts = t0 + dt.timedelta(seconds=sec, microseconds=int(rng.integers(0, 10**6)))
+            rows.append((len(rows), ts, u, "telemetry", v, None))
+    spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.parquet(
+        os.path.join(sf_dir, "events.parquet")
+    )
+    return sf_dir
+
+
+def test_multi_sink_restart_soak(spark, tmp_path, monkeypatch):
+    """Replay soak: a dense fleet through the full fan-out under a real
+    StreamingQuery, with two injected crashes in batches whose carried
+    tail is non-empty — one BETWEEN the sink writes (bronze and
+    telemetry written, devices not), one after every sink but BEFORE the
+    tail commit (tail files written, marker not) — each followed by a
+    checkpoint restart. Bronze must equal the raw input, telemetry the
+    batch `spike_dip_score` oracle row for row, devices the first
+    sighting per device."""
+    from azure_iot_realtime_data_pipeline_spark.streaming import pipeline
+
+    sf = _dense_fleet(spark, str(tmp_path / "sf"))
+    replay = stage_replay_dir(spark, sf, str(tmp_path / "replay"), num_files=6)
     bronze, devices, telemetry = (str(tmp_path / n) for n in ("b", "d", "t"))
     ckpt = str(tmp_path / "ckpt")
-    inner = multi_sink_batch_writer(bronze, devices, telemetry)
-    crashed = {"done": False}
+    tail_dir = os.path.join(ckpt, "tail")
+    crashes = []
 
-    def crashy(batch, batch_id):
-        if batch_id == 2 and not crashed["done"]:
-            crashed["done"] = True
-            _write_batch_scoped(batch, batch_id, bronze)
-            raise RuntimeError("injected mid-fan-out crash")
-        inner(batch, batch_id)
+    def assert_tail_carried(batch_id):
+        tail, carried = pipeline._read_tail(spark, tail_dir, batch_id - 1)
+        assert carried is not None and tail.count() > 0
 
-    def start():
-        return (
-            curated_stream(replay_events(spark, replay), history_size=None)
-            .writeStream.foreachBatch(crashy)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    upsert = pipeline.upsert_devices
+    upserts = []
+
+    def crash_between_sinks(batch, devices_dir):
+        upserts.append(1)
+        if len(upserts) == 3:  # batch 2, first attempt
+            assert_tail_carried(2)
+            crashes.append("sinks")
+            raise RuntimeError("injected crash between sink writes")
+        upsert(batch, devices_dir)
+
+    commit = pipeline._commit_tail
+
+    def crash_before_tail_commit(tail, tail_dir_, batch_id, carry):
+        if batch_id == 4 and "tail" not in crashes:
+            assert_tail_carried(batch_id)
+            crashes.append("tail")
+            tail.write.mode("overwrite").parquet(pipeline._tail_path(tail_dir_, batch_id))
+            raise RuntimeError("injected crash before the tail commit")
+        commit(tail, tail_dir_, batch_id, carry)
+
+    monkeypatch.setattr(pipeline, "upsert_devices", crash_between_sinks)
+    monkeypatch.setattr(pipeline, "_commit_tail", crash_before_tail_commit)
+
+    def run():
+        q = run_multi_sink(
+            curated_stream(replay_events(spark, replay)),
+            bronze,
+            devices,
+            telemetry,
+            ckpt,
+            available_now=True,
         )
+        try:
+            q.awaitTermination(300)
+        except Exception:  # noqa: BLE001 - the injected crash
+            pass
+        return q
 
-    q = start()
-    with pytest.raises(Exception):
-        q.awaitTermination(300)
-        raise AssertionError("first run should die on the injected crash")
-    assert crashed["done"]
+    for want in (["sinks"], ["sinks", "tail"]):
+        q = run()
+        assert crashes == want and q.exception() is not None
+    q = run()
+    assert not q.isActive and q.exception() is None
 
-    q2 = start()
-    q2.awaitTermination(300)
-    assert not q2.isActive and q2.exception() is None
-
-    ev = with_epoch_seconds(load_table(spark, sf_oracle, "events"), "ts")
+    ev = load_table(spark, sf, "events")
     w = trailing_window("ts_sec", key="user_id", window_seconds=60)
     is_anom, score = spike_dip_score(F.col("value"), w)
-    expected = ev.select(
+    expected = with_epoch_seconds(ev, "ts").select(
         F.col("event_id").alias("telemetryId"),
         F.concat(F.lit("dev-"), F.col("user_id").cast("string")).alias("deviceId"),
         F.col("ts").alias("enqueuedTime"),
-        "value",
         score.alias("Score"),
         is_anom.alias("Anomaly"),
-    ).filter(F.col("deviceId").isNotNull())
-
-    def row_set(df, cols):
-        return {tuple(r) for r in df.select(*cols).collect()}
-
-    cols = ["telemetryId", "deviceId", "enqueuedTime", "value", "Score", "Anomaly"]
-    assert row_set(spark.read.parquet(bronze).drop("batch_id"), cols) == row_set(
-        expected, cols
     )
-    tcols = [c for c in cols if c != "value"]
-    assert row_set(spark.read.parquet(telemetry).drop("batch_id"), tcols) == row_set(
-        expected, tcols
-    )
+
+    def rows(df, cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    assert rows(spark.read.parquet(bronze), ev.columns) == rows(ev, ev.columns)
+    tcols = expected.columns
+    got = rows(spark.read.parquet(telemetry), tcols)
+    assert len(got) == ev.count()
+    assert got == rows(expected, tcols)
+    assert sum(r[-1] for r in got) > 0  # the spikes flag
     d = spark.read.parquet(devices)
     assert d.groupBy("deviceId").count().filter(F.col("count") > 1).count() == 0
-    assert row_set(d, ["deviceId", "firstSeen"]) == row_set(
+    assert rows(d, ["deviceId", "firstSeen"]) == rows(
         expected.groupBy("deviceId").agg(F.min("enqueuedTime").alias("firstSeen")),
         ["deviceId", "firstSeen"],
     )
@@ -275,17 +335,19 @@ def test_multi_sink_merge_mode_latest_wins_and_replays_clean(
     d = acid.read_table(spark, devices)
     assert set(d.columns) == {"deviceId", "lastSeen"}
     assert d.groupBy("deviceId").count().filter(F.col("count") > 1).count() == 0
-    b = spark.read.parquet(bronze)
+    t = spark.read.parquet(telemetry)
     want = {
         (r["deviceId"], r["mx"])
-        for r in b.groupBy("deviceId")
+        for r in t.groupBy("deviceId")
         .agg(F.max("enqueuedTime").alias("mx"))
         .collect()
     }
     got = {(r["deviceId"], r["lastSeen"]) for r in d.collect()}
     assert got == want  # LATEST enqueuedTime won, across batches AND replays
     with pytest.raises(ValueError, match="devices_mode"):
-        multi_sink_batch_writer(bronze, devices, telemetry, devices_mode="bogus")
+        multi_sink_batch_writer(
+            bronze, devices, telemetry, str(tmp_path / "tail"), devices_mode="bogus"
+        )
 
 
 def test_devices_upsert_is_first_write_wins(spark, replay_dir, tmp_path):
@@ -401,7 +463,7 @@ def test_serve_path_soak_ingest_to_push(spark, sf_oracle, tmp_path):
                 os.path.join(live, f"bucket={b:02d}"),
             )
         q = run_multi_sink(
-            curated_stream(replay_events(spark, live), history_size=None),
+            curated_stream(replay_events(spark, live)),
             bronze,
             devices,
             telemetry,
@@ -479,3 +541,38 @@ def test_serve_path_soak_ingest_to_push(spark, sf_oracle, tmp_path):
         __import__("json").loads(r)["telemetryId"] for r in fail.rows
     }
     assert dup <= prefix
+
+
+def test_far_late_row_reaches_bronze_only(spark, tmp_path):
+    """Late policy: a row more than 60 s behind the max event time of the
+    earlier micro-batches is archived in bronze (the raw input) but never
+    reaches telemetry or devices; a row less late is still scored."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    first = [(i, t0 + dt.timedelta(seconds=i), 1, 10.0 + i) for i in range(10)]
+    second = [(10 + i, t0 + dt.timedelta(seconds=10 + i), 1, 20.0 + i) for i in range(10)]
+    second += [
+        (100, t0 - dt.timedelta(seconds=120), 2, 5.0),  # far-late: > 60 s behind
+        (101, t0 - dt.timedelta(seconds=30), 3, 6.0),  # late, inside the delay
+    ]
+    replay = _stage_event_files(spark, str(tmp_path / "replay"), [first, second])
+    bronze, devices, telemetry = (str(tmp_path / n) for n in ("b", "d", "t"))
+    q = run_multi_sink(
+        curated_stream(replay_events(spark, replay)),
+        bronze,
+        devices,
+        telemetry,
+        str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+
+    t_ids = {r["telemetryId"] for r in spark.read.parquet(telemetry).collect()}
+    assert 100 not in t_ids
+    assert t_ids == set(range(20)) | {101}
+    d_ids = {r["deviceId"] for r in spark.read.parquet(devices).collect()}
+    assert d_ids == {"dev-1", "dev-3"}
+    b_ids = {r["event_id"] for r in spark.read.parquet(bronze).collect()}
+    assert b_ids == set(range(20)) | {100, 101}
