@@ -9,7 +9,8 @@ The reference's .NET worker tails the Telemetry table:
 with the watermark persisted in Table Storage and advanced ONLY after a
 successful sink write (cs:142-146) — at-least-once delivery with a
 monotone watermark. Initial load paginates with OFFSET/FETCH
-(cs:219-229).
+(cs:219-229). The streaming sync worker's state cell lives in
+`streaming/http_sink.py`.
 
 Scale notes: the watermark filter is a pushed-down range predicate — on
 a date-partitioned table Catalyst prunes partitions, so the tail read
@@ -20,9 +21,7 @@ and for bounded pages, not as a 100 TB access path.
 
 from __future__ import annotations
 
-import json
 import os
-import tempfile
 from datetime import datetime
 
 from pyspark.sql import DataFrame
@@ -79,41 +78,3 @@ def offset_fetch(df: DataFrame, order_cols: list[str], offset: int, fetch: int) 
     """ORDER BY ... OFFSET n ROWS FETCH NEXT m ROWS ONLY (A7/E4)."""
     return df.orderBy(*order_cols).offset(offset).limit(fetch)
 
-
-class WatermarkStore:
-    """Single-cell key->value watermark state (A9).
-
-    Stand-in for the reference's Table Storage entity
-    ("sync","lastProcessed")["LastProcessedTime"]
-    (PushTelemetryFunction.cs:291-328): a tiny JSON file, updated only
-    after the caller reports a successful sink write. Structured
-    Streaming checkpoints subsume this in the streaming path; this class
-    serves the explicit batch-tail protocol and its tests.
-    """
-
-    def __init__(self, path: str, default_lookback_seconds: int = 3600):
-        # default lookback now-1h mirrors cs:288,301,306
-        self.path = path
-        self.default_lookback_seconds = default_lookback_seconds
-
-    def get(self, now: datetime) -> datetime:
-        if os.path.exists(self.path):
-            with open(self.path) as f:
-                return datetime.fromisoformat(json.load(f)["last_processed"])
-        from datetime import timedelta
-
-        return now - timedelta(seconds=self.default_lookback_seconds)
-
-    def commit(self, ts: datetime) -> None:
-        """Advance the watermark (call only after sink success; monotone)."""
-        current = None
-        if os.path.exists(self.path):
-            with open(self.path) as f:
-                current = datetime.fromisoformat(json.load(f)["last_processed"])
-        if current is not None and ts <= current:
-            return
-        d = os.path.dirname(self.path) or "."
-        fd, tmp = tempfile.mkstemp(dir=d)
-        with os.fdopen(fd, "w") as f:
-            json.dump({"last_processed": ts.isoformat()}, f)
-        os.replace(tmp, self.path)

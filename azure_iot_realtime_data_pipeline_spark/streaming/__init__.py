@@ -10,6 +10,6 @@ Binds the batch-proven operator semantics to `readStream`:
                  devices (F1-F5/F7)
 - windows_stream.py — streaming session/tumbling/hopping aggregation
                  (K1-K3 streaming forms, batch-equivalence tested)
-- http_sink.py — chunked, paced HTTP row push + high-watermark commit
-                 protocol (A8/A9/F6/F8/F9)
+- http_sink.py — chunked, paced HTTP row push tailing the telemetry sink
+                 by commit order, last-pushed-batch cell (A8/A9/F6/F8/F9)
 """

@@ -1,4 +1,4 @@
-"""Chunked, paced HTTP row sink + high-watermark commit protocol.
+"""Chunked, paced HTTP row sink + commit-order sync cell.
 
 Reproduces the reference .NET sync worker's serve path
 (reference azure-function/PushTelemetryFunction.cs):
@@ -6,14 +6,25 @@ Reproduces the reference .NET sync worker's serve path
 - A8  HTTP push of a JSON array of flat rows, <=500 rows per POST,
       abort on non-2xx (cs:402-425; batch size cs:192-195)
 - F8  200 ms pacing between POSTs during backfill (cs:264)
-- A9  single high-watermark state cell, default lookback now-1h when
-      absent (cs:280-308)
-- F6  incremental consumption: read rows strictly newer than the
-      watermark, push, and advance the watermark ONLY after a fully
-      successful push (cs:100-157, gate at 142-146) — at-least-once
-      delivery with a monotone watermark.
-- F9  initial-load mode: same query with an unbounded start watermark
-      (cs:37-86).
+- A9  single state cell: the last pushed micro-batch id of the
+      telemetry sink; when absent, the tick reads every committed batch
+      but only rows from now-1h on (the reference's default lookback,
+      cs:280-308)
+- F6  incremental consumption by COMMIT order: a tick lists the sink's
+      `batch_id=` partitions above the cell, reads only those, pushes
+      their rows ordered by event time and advances the cell ONLY after
+      a fully successful push (cs:100-157, gate at 142-146) —
+      at-least-once delivery with a monotone cell. The reference tails
+      by event time (`enqueuedTime > @last`); the stream commits in
+      batch order, so a row that is on time but out of order lands in a
+      later batch with an older timestamp, and only a commit-order cell
+      still delivers it. A tick with no new partition lists one
+      directory and launches no Spark job.
+- F9  initial-load mode: every committed batch, no lookback (cs:37-86).
+
+The sink must be `batch_id=`-partitioned, as `streaming/pipeline.py`
+writes it; partitions appear whole (Spark renames a batch's partition
+into place at job commit), in batch order.
 
 The poster is injected (any callable `(json_rows: list[str]) -> None`
 that raises on failure), so tests use an in-memory collector and
@@ -39,6 +50,7 @@ from pyspark.sql import functions as F
 BATCH_SIZE = 500
 PACE_SECONDS = 0.2
 DEFAULT_LOOKBACK = timedelta(hours=1)
+_PARTITION = "batch_id="
 
 Poster = Callable[[list[str]], None]
 
@@ -91,21 +103,32 @@ def push_rows(
     return sent
 
 
-def read_watermark(state_path: str, now: datetime | None = None) -> datetime:
-    """A9: the single state cell; default lookback now-1h when absent
-    (reference cs:288,301,306)."""
-    if os.path.exists(state_path):
+def read_cell(state_path: str) -> int | None:
+    """A9: the single state cell — the last pushed batch id, or None
+    when absent (a new sync worker)."""
+    try:
         with open(state_path) as fh:
-            return datetime.fromisoformat(json.load(fh)["last_processed"])
-    now = now or datetime.now(timezone.utc)
-    return now - DEFAULT_LOOKBACK
+            return json.load(fh)["last_batch_id"]
+    except FileNotFoundError:
+        return None
 
 
-def write_watermark(state_path: str, wm: datetime) -> None:
+def write_cell(state_path: str, batch_id: int) -> None:
     tmp = state_path + ".tmp"
     with open(tmp, "w") as fh:
-        json.dump({"last_processed": wm.isoformat()}, fh)
+        json.dump({"last_batch_id": batch_id}, fh)
     os.replace(tmp, state_path)
+
+
+def committed_batches(sink_dir: str, above: int | None = None) -> list[int]:
+    """Batch ids of the sink's `batch_id=<k>` partitions above `above`,
+    ascending; a directory listing, no Spark job."""
+    try:
+        names = os.listdir(sink_dir)
+    except FileNotFoundError:
+        return []
+    ids = sorted(int(n[len(_PARTITION):]) for n in names if n.startswith(_PARTITION))
+    return [k for k in ids if above is None or k > above]
 
 
 def incremental_push(
@@ -119,22 +142,28 @@ def incremental_push(
     batch_size: int = BATCH_SIZE,
     pace_seconds: float = PACE_SECONDS,
 ) -> int:
-    """One sync tick (F6/F9): tail-read -> push -> commit watermark.
+    """One sync tick (F6/F9): list new batches -> push -> commit the cell.
 
-    Returns rows pushed. The watermark advances to max(ts) of the pushed
-    rows only after every chunk succeeded; a mid-push failure leaves it
-    untouched, so the next tick redelivers (at-least-once, idempotent
-    under a monotone watermark). `initial_load=True` is the F9 backfill:
-    unbounded start, same commit protocol (cs:270-274).
+    Returns rows pushed; 0 when no batch committed since the last push
+    (then no Spark job runs). The cell advances to the highest batch id
+    read only after every chunk succeeded; a mid-push failure leaves it
+    untouched, so the next tick redelivers (at-least-once). Without a
+    cell the tick reads every batch but pushes rows from now-1h on;
+    `initial_load=True` is the F9 backfill: every batch, no lookback
+    (cs:270-274).
     """
-    df = spark.read.parquet(telemetry_dir)
-    if not initial_load:
-        wm = read_watermark(state_path, now=now)
-        df = df.filter(F.col(ts_col) > F.lit(wm.replace(tzinfo=None)))
-    df = df.orderBy(F.col(ts_col).asc())
-    hi = df.agg(F.max(ts_col).alias("hi")).collect()[0]["hi"]
-    if hi is None:
+    last = None if initial_load else read_cell(state_path)
+    batches = committed_batches(telemetry_dir, above=last)
+    if not batches:
         return 0
-    sent = push_rows(df, poster, batch_size=batch_size, pace_seconds=pace_seconds)
-    write_watermark(state_path, hi if hi.tzinfo else hi.replace(tzinfo=timezone.utc))
+    df = spark.read.option("basePath", telemetry_dir).parquet(
+        *(os.path.join(telemetry_dir, f"{_PARTITION}{k}") for k in batches)
+    )
+    if last is None and not initial_load:
+        start = (now or datetime.now(timezone.utc)) - DEFAULT_LOOKBACK
+        df = df.filter(F.col(ts_col) > F.lit(start))
+    sent = push_rows(
+        df.orderBy(F.col(ts_col).asc()), poster, batch_size=batch_size, pace_seconds=pace_seconds
+    )
+    write_cell(state_path, batches[-1])
     return sent

@@ -26,8 +26,12 @@ Reference semantics reproduced here:
   (PushTelemetryFunction.cs:20-23) is the SYNC worker's, modelled by the
   `http_sink.incremental_push` loop. `TRIGGER_INTERVAL` is therefore an
   engine policy: the shortest whole-second interval whose micro-batch
-  still finishes well inside it at the design rate. Tests use
-  `availableNow` for determinism.
+  still finishes well inside it at the design rate. At small batches an
+  event's freshness is about the wait for its trigger plus the batch's
+  fixed cost, so the body keeps that cost down: the sink writes run
+  concurrently and every batch runs one plan shape, so a stream's first
+  batch compiles what the later ones reuse. Tests use `availableNow`
+  for determinism.
 - F7 dimension dedup — the Devices sink upserts first-write-wins per
   deviceId into a PK'd table (reference
   iot-stream-analytics-query.sql:53-61 + README.MD:159-165): batch-local
@@ -48,7 +52,8 @@ README.MD:152-154).
 Scale notes: one persisted window pass per micro-batch feeds telemetry,
 devices and the next tail; the carried max rides on the bronze write as
 an `Observation` (no extra job). The dimension anti-join broadcasts the
-stored key set; bronze/telemetry appends are partitioned parquet writes.
+stored key set; bronze/telemetry appends are partitioned parquet writes,
+and the telemetry partitions are what the sync worker tails.
 """
 
 from __future__ import annotations
@@ -58,8 +63,10 @@ import json
 import os
 import shutil
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -85,6 +92,8 @@ TRIGGER_INTERVAL = "5 seconds"
 #: the scorer's retained rows: what a later row's window needs of them
 TAIL_SCHEMA = "event_id long, ts timestamp, user_id long, value double"
 _CARRY_FILE = "_carry.json"
+_EMPTY_TAIL = "empty"
+_MIN_LONG = -(2**63)
 
 
 def curated_stream(events: DataFrame) -> DataFrame:
@@ -104,21 +113,21 @@ def upsert_devices(batch: DataFrame, devices_dir: str) -> None:
     """First-write-wins upsert of device metadata (F7).
 
     New keys only: batch-local first-value dedup, anti-join against the
-    stored dimension, append. The stored side stays small (one row per
-    device), so the anti-join broadcasts.
+    stored dimension (an empty directory for a new dimension), append.
+    The stored side stays small (one row per device), so the anti-join
+    broadcasts.
     """
-    spark = batch.sparkSession
     devices = first_value_per_key(
         batch.select("deviceId", F.col("enqueuedTime").alias("firstSeen")),
         key="deviceId",
         ts_col="firstSeen",
     )
-    if os.path.isdir(devices_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(devices_dir)
-    ):
-        existing = spark.read.schema(devices.schema).parquet(devices_dir).select("deviceId")
-        devices = devices.join(F.broadcast(existing), "deviceId", "left_anti")
-    devices.write.mode("append").parquet(devices_dir)
+    # read even when empty, so every batch runs the same plan
+    os.makedirs(devices_dir, exist_ok=True)
+    existing = batch.sparkSession.read.schema(devices.schema).parquet(devices_dir)
+    devices.join(F.broadcast(existing.select("deviceId")), "deviceId", "left_anti").write.mode(
+        "append"
+    ).parquet(devices_dir)
 
 
 def upsert_devices_merge(batch: DataFrame, devices_table_dir: str) -> dict:
@@ -161,16 +170,19 @@ def _tail_path(tail_dir: str, batch_id: int) -> str:
     return os.path.join(tail_dir, f"batch_id={batch_id}")
 
 
-def _read_tail(spark, tail_dir: str, batch_id: int) -> tuple[DataFrame | None, int | None]:
-    """(rows, carried max event time in epoch µs) committed by `batch_id`;
-    (None, None) when that batch left no committed tail (a fresh stream)."""
+def _read_tail(spark, tail_dir: str, batch_id: int) -> tuple[DataFrame, int | None]:
+    """(rows, carried max event time in epoch µs) committed by `batch_id`.
+    When that batch left no committed tail (a fresh stream) the rows come
+    from an empty directory and the max is None: every batch reads its
+    tail through the same plan."""
     path = _tail_path(tail_dir, batch_id)
     try:
         with open(os.path.join(path, _CARRY_FILE)) as fh:
-            carry = json.load(fh)
+            max_us = json.load(fh)["max_us"]
     except FileNotFoundError:
-        return None, None
-    return spark.read.schema(TAIL_SCHEMA).parquet(path), carry["max_us"]
+        path, max_us = os.path.join(tail_dir, _EMPTY_TAIL), None
+        os.makedirs(path, exist_ok=True)
+    return spark.read.schema(TAIL_SCHEMA).parquet(path), max_us
 
 
 def _commit_tail(tail: DataFrame, tail_dir: str, batch_id: int, carry: dict) -> None:
@@ -186,6 +198,23 @@ def _commit_tail(tail: DataFrame, tail_dir: str, batch_id: int, carry: dict) -> 
     for old in glob.glob(os.path.join(tail_dir, "batch_id=*")):
         if int(old.rsplit("=", 1)[1]) < batch_id - 1:
             shutil.rmtree(old, ignore_errors=True)
+
+
+def _concurrently(spark: SparkSession, *calls: Callable[[], None]) -> None:
+    """Run `calls` on threads of their own and return once all finished,
+    raising the first call's error.
+
+    Each thread starts with its own copy of the calling thread's Spark
+    local properties — in a `foreachBatch` body, the streaming query's
+    job group — so its jobs belong to the query and `query.stop()`
+    cancels them. No thread outlives the call.
+    """
+    with ThreadPoolExecutor(len(calls)) as pool:
+        # one wrapper per call: each copies the properties, and a copy
+        # must not be shared, since a thread's SQL executions write to it
+        futures = [pool.submit(inheritable_thread_target(spark)(call)) for call in calls]
+    for f in futures:
+        f.result()
 
 
 def multi_sink_batch_writer(
@@ -210,6 +239,15 @@ def multi_sink_batch_writer(
     4. telemetry and devices take the new rows of that pass, and tail k
        its rows within window + late tolerance of the new max, at most
        DEFAULT_HISTORY_SIZE (85) per key.
+
+    Write order: bronze, telemetry and devices are independent and are
+    issued concurrently, each from its own thread; tail k follows once
+    all three are done, since it needs bronze's `Observation`. The
+    threads inherit the query's job group (so `query.stop()` cancels
+    their jobs) and end before the body returns; an error in any write
+    is raised after the others finished. A fresh stream reads an empty
+    tail and a new dimension an empty directory, so every batch runs
+    the same plans.
 
     Scores equal the batch operator's over the whole on-time stream for
     input where rows sharing an epoch second arrive in one micro-batch
@@ -257,26 +295,30 @@ def multi_sink_batch_writer(
     )
 
     def write(batch: DataFrame, batch_id: int) -> None:
-        tail, carried_us = _read_tail(batch.sparkSession, tail_dir, batch_id - 1)
-        late = (
-            F.lit(False)
-            if carried_us is None
-            else F.unix_micros("ts") < F.lit(carried_us - late_us)
-        )
+        spark = batch.sparkSession
+        tail, carried_us = _read_tail(spark, tail_dir, batch_id - 1)
+        # a fresh stream cuts at the smallest long: the same plan, no row late
+        cut_us = _MIN_LONG if carried_us is None else carried_us - late_us
+        late = F.unix_micros("ts") < F.lit(cut_us)
         obs = Observation()
-        fresh = batch.filter(~late & F.col("user_id").isNotNull()).select(
-            "event_id", "ts", "user_id", "value", F.lit(True).alias("_new")
+        fresh = (
+            batch.filter(~late & F.col("user_id").isNotNull())
+            .select("event_id", "ts", "user_id", "value", F.lit(True).alias("_new"))
+            .unionByName(tail.withColumn("_new", F.lit(False)))
         )
-        if tail is not None:
-            fresh = fresh.unionByName(tail.withColumn("_new", F.lit(False)))
         scored = with_epoch_seconds(fresh, "ts").select(
             "*", score.alias("Score"), is_anom.alias("Anomaly"), newer.alias("_newer")
         )
-        # one source scan: the bronze write fills the cache the scorer reads
-        batch.persist()
-        scored.persist()
-        try:
-            _write_batch_scoped(  # A3 bronze raw
+        curated = scored.filter("_new").select(
+            F.col("event_id").alias("telemetryId"),
+            F.concat(F.lit("dev-"), F.col("user_id").cast("string")).alias("deviceId"),
+            F.col("ts").alias("enqueuedTime"),
+            "Score",
+            "Anomaly",
+        )
+
+        def bronze() -> None:  # A3 bronze raw
+            _write_batch_scoped(
                 batch.observe(
                     obs,
                     F.max(F.unix_micros("ts")).alias("max_us"),
@@ -285,18 +327,24 @@ def multi_sink_batch_writer(
                 batch_id,
                 bronze_dir,
             )
-            curated = scored.filter("_new").select(
-                F.col("event_id").alias("telemetryId"),
-                F.concat(F.lit("dev-"), F.col("user_id").cast("string")).alias("deviceId"),
-                F.col("ts").alias("enqueuedTime"),
-                "Score",
-                "Anomaly",
-            )
-            _write_batch_scoped(curated, batch_id, telemetry_dir)  # A5 fact
+
+        def devices() -> None:  # A4/F7 dimension
             if devices_mode == "merge":
-                upsert_devices_merge(curated, devices_dir)  # A4/F7 dimension
+                upsert_devices_merge(curated, devices_dir)
             else:
                 upsert_devices(curated, devices_dir)
+
+        # one source scan and one scoring pass: whichever write reaches a
+        # partition first fills the cache, the others wait for its block
+        batch.persist()
+        scored.persist()
+        try:
+            _concurrently(
+                spark,
+                bronze,
+                lambda: _write_batch_scoped(curated, batch_id, telemetry_dir),  # A5 fact
+                devices,
+            )
             stats = obs.get
             max_us = max((v for v in (carried_us, stats["max_us"]) if v is not None), default=None)
             keep = F.col("_newer") <= DEFAULT_HISTORY_SIZE

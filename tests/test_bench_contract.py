@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import inspect
 
-from azure_iot_realtime_data_pipeline_spark.streaming import anomaly, pipeline
+from azure_iot_realtime_data_pipeline_spark.streaming import anomaly, http_sink, pipeline
 from perfbench.fleet import trigger_seconds
 
 
@@ -28,3 +28,11 @@ def test_fleet_call_binds_with_defaults():
         None, "bronze", "devices", "telemetry", "checkpoint", available_now=True
     )
     inspect.signature(pipeline.curated_stream).bind(None)
+
+
+def test_sync_tick_binds_and_counts_rows(tmp_path):
+    # perfbench/fleet.py:SyncLoop.tick; an empty tick needs no Spark at all
+    args = (None, str(tmp_path / "telemetry"), str(tmp_path / "sync.json"), print)
+    inspect.signature(http_sink.incremental_push).bind(*args)
+    rows = http_sink.incremental_push(*args)
+    assert type(rows) is int and rows == 0

@@ -138,8 +138,11 @@ def test_multi_sink_fanout(spark, sf_smoke, replay_dir, tmp_path):
     bronze = str(tmp_path / "bronze")
     devices = str(tmp_path / "devices")
     telemetry = str(tmp_path / "telemetry")
+    stream = curated_stream(replay_events(spark, replay_dir))
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup())
     q = run_multi_sink(
-        curated_stream(replay_events(spark, replay_dir)),
+        stream,
         bronze,
         devices,
         telemetry,
@@ -147,6 +150,10 @@ def test_multi_sink_fanout(spark, sf_smoke, replay_dir, tmp_path):
         available_now=True,
     )
     q.awaitTermination(300)
+    # every job of every batch, the concurrent sink writes included, runs
+    # in the query's job group, so stopping the query cancels it
+    assert set(tracker.getJobIdsForGroup()) == ungrouped
+    assert tracker.getJobIdsForGroup(str(q.runId))
 
     events = load_table(spark, sf_smoke, "events")
     b = spark.read.parquet(bronze)
@@ -216,12 +223,14 @@ def _dense_fleet(spark, sf_dir, seconds=600, seed=7):
 def test_multi_sink_restart_soak(spark, tmp_path, monkeypatch):
     """Replay soak: a dense fleet through the full fan-out under a real
     StreamingQuery, with two injected crashes in batches whose carried
-    tail is non-empty — one BETWEEN the sink writes (bronze and
-    telemetry written, devices not), one after every sink but BEFORE the
-    tail commit (tail files written, marker not) — each followed by a
-    checkpoint restart. Bronze must equal the raw input, telemetry the
-    batch `spike_dip_score` oracle row for row, devices the first
-    sighting per device."""
+    tail is non-empty — one raised by the devices sink while the other
+    sink writes, issued concurrently, are in flight, one after every
+    sink but BEFORE the tail commit (tail files written, marker not) —
+    each followed by a checkpoint restart. Bronze must equal the raw
+    input, telemetry the batch `spike_dip_score` oracle row for row,
+    devices the first sighting per device."""
+    import threading
+
     from azure_iot_realtime_data_pipeline_spark.streaming import pipeline
 
     sf = _dense_fleet(spark, str(tmp_path / "sf"))
@@ -237,11 +246,19 @@ def test_multi_sink_restart_soak(spark, tmp_path, monkeypatch):
 
     upsert = pipeline.upsert_devices
     upserts = []
+    write_scoped = pipeline._write_batch_scoped
+    telemetry_started = threading.Event()
+
+    def mark_telemetry_write(batch, batch_id, out_dir):
+        if out_dir == telemetry and batch_id == 2:
+            telemetry_started.set()
+        write_scoped(batch, batch_id, out_dir)
 
     def crash_between_sinks(batch, devices_dir):
         upserts.append(1)
         if len(upserts) == 3:  # batch 2, first attempt
             assert_tail_carried(2)
+            assert telemetry_started.wait(60)
             crashes.append("sinks")
             raise RuntimeError("injected crash between sink writes")
         upsert(batch, devices_dir)
@@ -256,6 +273,7 @@ def test_multi_sink_restart_soak(spark, tmp_path, monkeypatch):
             raise RuntimeError("injected crash before the tail commit")
         commit(tail, tail_dir_, batch_id, carry)
 
+    monkeypatch.setattr(pipeline, "_write_batch_scoped", mark_telemetry_write)
     monkeypatch.setattr(pipeline, "upsert_devices", crash_between_sinks)
     monkeypatch.setattr(pipeline, "_commit_tail", crash_before_tail_commit)
 
@@ -387,46 +405,92 @@ def test_push_rows_chunks_and_preserves_order(spark, sf_smoke):
 
 
 def test_incremental_push_watermark_protocol(spark, sf_smoke, tmp_path):
-    """F6: watermark advances only after full success; failed push leaves
-    it untouched and the next tick redelivers (at-least-once)."""
+    """F6: the cell (last pushed batch id) advances only after full
+    success; a failed push leaves it untouched and the next tick
+    redelivers (at-least-once)."""
+    import json
+
     src = str(tmp_path / "fact")
     load_table(spark, sf_smoke, "events").select(
-        "event_id", F.col("ts").alias("enqueuedTime"), "value"
-    ).write.parquet(src)
+        "event_id",
+        F.col("ts").alias("enqueuedTime"),
+        "value",
+        (F.col("event_id") % 4).alias("batch_id"),
+    ).write.partitionBy("batch_id").parquet(src)
     state = str(tmp_path / "wm.json")
 
-    # tick 1: initial load, everything delivered, watermark commits
+    # tick 1: initial load, everything delivered, cell commits
     ok = http_sink.CollectingPoster()
     n1 = http_sink.incremental_push(
         spark, src, state, ok, initial_load=True, pace_seconds=0.0
     )
-    assert n1 == len(ok.rows) > 0
-    assert os.path.exists(state)
+    assert n1 == len(ok.rows) == spark.read.parquet(src).count() > 0
+    assert http_sink.read_cell(state) == 3
 
     # tick 2: nothing new
     n2 = http_sink.incremental_push(spark, src, state, ok, pace_seconds=0.0)
     assert n2 == 0
 
-    # regress the watermark to simulate pending rows, then fail mid-push:
-    # state must NOT advance
-    wm_before = http_sink.read_watermark(state)
-    mid = spark.read.parquet(src).agg(
-        F.expr("percentile_approx(enqueuedTime, 0.5)").alias("m")
-    ).collect()[0]["m"]
-    http_sink.write_watermark(state, mid)
+    # regress the cell to simulate pending batches, then fail mid-push:
+    # the cell must NOT advance
+    http_sink.write_cell(state, 1)
     failing = http_sink.CollectingPoster(fail_times=1)
     with pytest.raises(ConnectionError):
         http_sink.incremental_push(
             spark, src, state, failing, batch_size=100, pace_seconds=0.0
         )
-    assert http_sink.read_watermark(state) == http_sink.read_watermark(state)
-    assert http_sink.read_watermark(state).replace(tzinfo=None) == mid.replace(tzinfo=None)
+    assert http_sink.read_cell(state) == 1
 
-    # retry tick: delivers the tail and commits to the true max
+    # retry tick: redelivers batches 2 and 3, in event-time order, and
+    # commits to the last of them
     retry = http_sink.CollectingPoster()
     n3 = http_sink.incremental_push(spark, src, state, retry, pace_seconds=0.0)
-    assert n3 > 0
-    assert http_sink.read_watermark(state) >= wm_before
+    pending = spark.read.parquet(src).filter("batch_id > 1")
+    assert n3 == pending.count()
+    times = [json.loads(r)["enqueuedTime"] for r in retry.rows]
+    assert times == sorted(times)
+    assert http_sink.read_cell(state) == 3
+
+
+def test_sync_tick_reads_only_new_batches(spark, tmp_path):
+    """A tick with no batch above the cell lists one directory and runs
+    no Spark job; a tick with new batches reads only their partitions."""
+    import datetime as dt
+    import json
+
+    src = str(tmp_path / "fact")
+    state = str(tmp_path / "sync.json")
+
+    def commit_batch(batch_id, ids):
+        spark.createDataFrame(
+            [(i, dt.datetime(2024, 1, 1, 12, 0, i)) for i in ids],
+            "telemetryId long, enqueuedTime timestamp",
+        ).withColumn("batch_id", F.lit(batch_id)).write.mode("append").partitionBy(
+            "batch_id"
+        ).parquet(src)
+
+    commit_batch(0, range(0, 5))
+    commit_batch(1, range(5, 10))
+    first = http_sink.CollectingPoster()
+    assert http_sink.incremental_push(spark, src, state, first, initial_load=True) == 10
+
+    sc = spark.sparkContext
+    sc.setJobGroup("empty-tick", "a tick with nothing new")
+    try:
+        assert http_sink.incremental_push(spark, src, state, first) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("empty-tick") == []
+
+    # a pushed batch that can no longer be read: a tick that touched it fails
+    with open(os.path.join(src, "batch_id=0", "part-garbage.parquet"), "w") as fh:
+        fh.write("not parquet")
+    commit_batch(2, range(10, 13))
+    poster = http_sink.CollectingPoster()
+    assert http_sink.incremental_push(spark, src, state, poster) == 3
+    ids = [json.loads(r)["telemetryId"] for r in poster.rows]
+    assert ids == [10, 11, 12]
+    assert http_sink.read_cell(state) == 2
 
 
 def test_serve_path_soak_ingest_to_push(spark, sf_oracle, tmp_path):
@@ -435,15 +499,16 @@ def test_serve_path_soak_ingest_to_push(spark, sf_oracle, tmp_path):
     ids continue across waves, only new files process), with an
     incremental_push tick after each wave, a mid-push POST failure
     injected on the second tick, and a simulated process restart (the
-    push path's only state is the watermark file — each tick starts
-    from disk). Invariants, per the reference's watermark protocol
-    (PushTelemetryFunction.cs:140-157): the watermark is MONOTONE
-    across every tick and untouched by the failed one; after the final
-    tick the receiver holds EVERY curated row exactly once after
-    at-least-once dedup by telemetryId; each tick pushes only rows
-    beyond the committed watermark."""
+    push path's only state is the cell file — each tick starts from
+    disk). Invariants, per the reference's commit protocol
+    (PushTelemetryFunction.cs:140-157), with the cell holding the last
+    pushed batch id: the cell is MONOTONE across every tick and
+    untouched by the failed one; after the final tick the receiver
+    holds EVERY curated row exactly once after at-least-once dedup by
+    telemetryId; each tick pushes only rows of batches above the
+    committed cell."""
+    import json
     import shutil
-    from datetime import datetime, timezone
 
     staged = stage_replay_dir(
         spark, sf_oracle, str(tmp_path / "staged"), num_files=6
@@ -473,14 +538,14 @@ def test_serve_path_soak_ingest_to_push(spark, sf_oracle, tmp_path):
         q.awaitTermination(300)
         assert q.exception() is None
 
-    def wm() -> datetime:
-        return http_sink.read_watermark(state)
+    def wm() -> int:
+        return http_sink.read_cell(state)
 
     received: dict[str, int] = {}
 
     def absorb(poster: http_sink.CollectingPoster) -> None:
         for r in poster.rows:
-            rid = __import__("json").loads(r)["telemetryId"]
+            rid = json.loads(r)["telemetryId"]
             received[rid] = received.get(rid, 0) + 1
 
     # wave 1: backfill tick (F9 initial load)
@@ -494,7 +559,7 @@ def test_serve_path_soak_ingest_to_push(spark, sf_oracle, tmp_path):
     w1 = wm()
     absorb(p1)
 
-    # wave 2: mid-push failure -> watermark untouched -> retry redelivers
+    # wave 2: mid-push failure -> cell untouched -> retry redelivers
     ingest_wave([2, 3])
     fail = http_sink.CollectingPoster(fail_times=2)  # dies on chunk 2
     with pytest.raises(ConnectionError):
@@ -512,11 +577,8 @@ def test_serve_path_soak_ingest_to_push(spark, sf_oracle, tmp_path):
     assert n2 > 0
     w2 = wm()
     assert w2 > w1
-    # the retry pushed ONLY rows beyond the committed watermark
-    for r in retry.rows:
-        ts = __import__("json").loads(r)["enqueuedTime"]
-        assert datetime.fromisoformat(ts).replace(tzinfo=timezone.utc) > \
-            w1.replace(tzinfo=timezone.utc)
+    # the retry pushed ONLY rows of batches above the committed cell
+    assert all(json.loads(r)["batch_id"] > w1 for r in retry.rows)
     absorb(retry)
 
     # wave 3: clean tick
@@ -538,7 +600,7 @@ def test_serve_path_soak_ingest_to_push(spark, sf_oracle, tmp_path):
     # the only duplicates are the failed tick's delivered prefix
     dup = {k for k, v in received.items() if v > 1}
     prefix = {
-        __import__("json").loads(r)["telemetryId"] for r in fail.rows
+        json.loads(r)["telemetryId"] for r in fail.rows
     }
     assert dup <= prefix
 
@@ -576,3 +638,44 @@ def test_far_late_row_reaches_bronze_only(spark, tmp_path):
     assert d_ids == {"dev-1", "dev-3"}
     b_ids = {r["event_id"] for r in spark.read.parquet(bronze).collect()}
     assert b_ids == set(range(20)) | {100, 101}
+
+
+def test_out_of_order_row_is_delivered(spark, tmp_path):
+    """A row that is on time but out of order commits in a later
+    micro-batch with an `enqueuedTime` below rows an earlier sync tick
+    already pushed; the tick after its batch must still deliver it."""
+    import datetime as dt
+    import json
+    import shutil
+
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    first = [(i, t0 + dt.timedelta(seconds=i), 1, 10.0 + i) for i in range(10)]
+    second = [(10 + i, t0 + dt.timedelta(seconds=10 + i), 1, 20.0 + i) for i in range(5)]
+    second.append((99, t0 + dt.timedelta(seconds=5, milliseconds=500), 2, 7.0))
+    staged = _stage_event_files(spark, str(tmp_path / "staged"), [first, second])
+    live = str(tmp_path / "live")
+    bronze, devices, telemetry = (str(tmp_path / n) for n in ("b", "d", "t"))
+    state = str(tmp_path / "sync.json")
+    received = []
+
+    for i in range(2):
+        shutil.copytree(
+            os.path.join(staged, f"bucket={i:02d}"), os.path.join(live, f"bucket={i:02d}")
+        )
+        q = run_multi_sink(
+            curated_stream(replay_events(spark, live)),
+            bronze,
+            devices,
+            telemetry,
+            str(tmp_path / "ckpt"),
+            available_now=True,
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+        poster = http_sink.CollectingPoster()
+        http_sink.incremental_push(
+            spark, telemetry, state, poster, initial_load=(i == 0), pace_seconds=0.0
+        )
+        received += [json.loads(r)["telemetryId"] for r in poster.rows]
+
+    assert sorted(received) == list(range(15)) + [99]
