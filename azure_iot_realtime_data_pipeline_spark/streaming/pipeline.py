@@ -84,10 +84,11 @@ from azure_iot_realtime_data_pipeline_spark.operators.windows import (
 )
 
 WATERMARK_DELAY = f"{LATE_TOLERANCE_SECONDS} seconds"
-#: F5 policy (module docstring): at 100 events/s on 4 cores a micro-batch
-#: takes about 2.0-2.4 s once warm, but the first ones after a start take
-#: up to 4.3 s; at 4 s those overran into the next interval
-TRIGGER_INTERVAL = "5 seconds"
+#: F5 policy (module docstring): at 100 events/s on 4 cores a 3 s
+#: micro-batch (300 rows) takes about 1.2-1.7 s and the first one after a
+#: start 1.3-1.8 s, so every batch starts on the grid; at 2 s the query's
+#: first batch (1.4 s, with the start) pushed the next one off the grid
+TRIGGER_INTERVAL = "3 seconds"
 
 #: the scorer's retained rows: what a later row's window needs of them
 TAIL_SCHEMA = "event_id long, ts timestamp, user_id long, value double"
