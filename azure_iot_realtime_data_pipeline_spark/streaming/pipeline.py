@@ -29,9 +29,9 @@ Reference semantics reproduced here:
   still finishes well inside it at the design rate. At small batches an
   event's freshness is about the wait for its trigger plus the batch's
   fixed cost, so the body keeps that cost down: the sink writes run
-  concurrently and every batch runs one plan shape, so a stream's first
-  batch compiles what the later ones reuse. Tests use `availableNow`
-  for determinism.
+  concurrently and every batch is planned alike, so a stream's first
+  batch compiles most of what the later ones reuse. Tests use
+  `availableNow` for determinism.
 - F7 dimension dedup — the Devices sink upserts first-write-wins per
   deviceId into a PK'd table (reference
   iot-stream-analytics-query.sql:53-61 + README.MD:159-165): batch-local
@@ -247,8 +247,9 @@ def multi_sink_batch_writer(
     threads inherit the query's job group (so `query.stop()` cancels
     their jobs) and end before the body returns; an error in any write
     is raised after the others finished. A fresh stream reads an empty
-    tail and a new dimension an empty directory, so every batch runs
-    the same plans.
+    tail and a new dimension an empty directory, so every batch is
+    planned alike (adaptive execution still drops the anti-join against
+    an empty dimension at run time).
 
     Scores equal the batch operator's over the whole on-time stream for
     input where rows sharing an epoch second arrive in one micro-batch

@@ -152,7 +152,7 @@ def test_multi_sink_fanout(spark, sf_smoke, replay_dir, tmp_path):
     q.awaitTermination(300)
     # every job of every batch, the concurrent sink writes included, runs
     # in the query's job group, so stopping the query cancels it
-    assert set(tracker.getJobIdsForGroup()) == ungrouped
+    assert set(tracker.getJobIdsForGroup()) <= ungrouped
     assert tracker.getJobIdsForGroup(str(q.runId))
 
     events = load_table(spark, sf_smoke, "events")
@@ -480,6 +480,7 @@ def test_sync_tick_reads_only_new_batches(spark, tmp_path):
         assert http_sink.incremental_push(spark, src, state, first) == 0
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     assert sc.statusTracker().getJobIdsForGroup("empty-tick") == []
 
     # a pushed batch that can no longer be read: a tick that touched it fails
