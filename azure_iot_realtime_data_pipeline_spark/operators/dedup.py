@@ -410,7 +410,12 @@ def simhash_signatures(
     ``simhash_hex_portable``. Empty docs keep their explode_outer NULL
     row, vote 0 on every bit, and land on signature 0 exactly like the
     Column form's empty-array fold. Vote/bit stages are rendered as SQL
-    strings (the r13 py4j-build-cost pattern)."""
+    strings (the r13 py4j-build-cost pattern).
+
+    Precondition: `id_col` must be unique. The votes are grouped by
+    doc_id, so rows sharing an id merge into one signature, where the
+    Column form gives one per row; the bit-identical claim holds only
+    for unique ids (q_simhash's are)."""
     src = ensure_parallelism(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
     )

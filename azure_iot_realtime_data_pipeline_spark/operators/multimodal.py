@@ -80,7 +80,10 @@ def _map_media(media: DataFrame, fn, schema: str) -> DataFrame:
     construction — the same two batch functions run in the same order on
     the same rows. Any transformation of the synth output
     (filter/select/join) drops the fusion handle and falls back to the
-    plain two-stage path."""
+    plain two-stage path. `persist()`/`cache()` do NOT drop it (PySpark
+    returns the same object), so a persisted synth frame takes the fused
+    path and its synth is recomputed, not read from the cache; results
+    are the same, since synth is deterministic."""
     fusion = getattr(media, "_sg_synth_fusion", None)
     if fusion is not None:
         src, synth = fusion

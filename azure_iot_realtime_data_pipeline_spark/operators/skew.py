@@ -231,7 +231,13 @@ def bloom_semi_join(
     inlined words for a broadcast (word_idx -> word) join on the probe
     side's word index. The collect here is the sanctioned bounded kind
     (the m/64-row word table, a build artifact like IVF centroids,
-    never the dim itself)."""
+    never the dim itself).
+
+    Precondition: `dim`'s lineage must be deterministic. It is evaluated
+    twice (Bloom build, then exact verify) with nothing materialized in
+    between; a lineage that samples, takes an unstable limit or reads a
+    changing source can yield different keys the second time, and the
+    prefilter then drops rows the verify would keep (false negatives)."""
     # r14 (guide §2.4, §3.2): build the Bloom words from the RAW key
     # column and verify against it directly — bit_or is idempotent
     # (duplicate keys OR the same bits) and left_semi is

@@ -8,10 +8,12 @@ driver itself only checks sf0.01, so this catches scale-dependent divergence
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from tests.parity import compare_spark_duckdb  # noqa: E402
 

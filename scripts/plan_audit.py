@@ -13,10 +13,12 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from azure_iot_realtime_data_pipeline_spark.session import get_spark  # noqa: E402
@@ -84,7 +86,7 @@ def main() -> int:
         f" single-partition exchanges {totals['single_part']}.",
         "",
     ]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"wrote PLANS.md ({len(rows)} queries)")
     return 0

@@ -721,8 +721,8 @@ def test_multiprocess_writer_race_soak(spark, tmp_path):
     worker_src = textwrap.dedent(
         """
         import os, sys, time, traceback
-        sys.path.insert(0, "/root/repo")
-        d, w, sync = sys.argv[1], int(sys.argv[2]), sys.argv[3]
+        d, w, sync, root = sys.argv[1], int(sys.argv[2]), sys.argv[3], sys.argv[4]
+        sys.path.insert(0, root)
         try:
             from pyspark.sql import SparkSession, functions as F
             spark = (SparkSession.builder.master("local[2]")
@@ -758,6 +758,8 @@ def test_multiprocess_writer_race_soak(spark, tmp_path):
     )
     script = tmp_path / "race_worker.py"
     script.write_text(worker_src)
+    # the workers import the package of the checkout this test runs from
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = {**os.environ, "SPARK_GRAFT_CPUS": "2"}
 
     attempts = 3
@@ -769,7 +771,7 @@ def test_multiprocess_writer_race_soak(spark, tmp_path):
         _mk_table(spark, tmp_path / f"t{attempt}", n=20, files=2)
         procs = [
             subprocess.Popen(
-                [sys.executable, str(script), d, str(w), str(sync)],
+                [sys.executable, str(script), d, str(w), str(sync), root],
                 stdout=subprocess.PIPE, stderr=subprocess.PIPE, env=env,
             )
             for w in (0, 1)
