@@ -95,11 +95,12 @@ from azure_iot_realtime_data_pipeline_spark.operators.windows import (
 )
 
 WATERMARK_DELAY = f"{LATE_TOLERANCE_SECONDS} seconds"
-#: F5 policy (module docstring): at 100 events/s on 4 cores a 3 s
-#: micro-batch (300 rows) takes about 1.2-1.7 s and the first one after a
-#: start 1.3-1.8 s, so every batch starts on the grid; at 2 s the query's
-#: first batch (1.4 s, with the start) pushed the next one off the grid
-TRIGGER_INTERVAL = "3 seconds"
+#: F5 policy (module docstring): at 100 events/s on 4 cores a 2 s
+#: micro-batch (200 rows) takes about 0.7-1.3 s and the first window
+#: batch after a start 0.9-1.6 s, so every batch starts on the 2 s grid;
+#: with a shuffle in the window and the dedup, 2 s batches took up to
+#: 1.7 s and slid off the grid in 2 of 10 runs
+TRIGGER_INTERVAL = "2 seconds"
 
 #: the scorer's retained rows: what a later row's window needs of them
 TAIL_SCHEMA = "event_id long, ts timestamp, user_id long, value double"
