@@ -61,9 +61,9 @@ The dimension anti-join broadcasts the stored key set; the telemetry
 partitions are what the sync worker tails. The plan was sized on the
 design traffic, 100 events/s or about 200 rows per 2 s batch. Its ceiling,
 measured with the bare writer on 4 cores (5020 keys, 2 s of event time per
-batch, warm batches): 300 rows take 1.0-1.2 s (the distributed plan, a
-hash exchange on user_id, 1.3-1.4 s), 10k rows 1.4-2.1 s (1.6-1.8 s), 100k
-rows 5.1-9.8 s (3.2-4.2 s). Past about 10k rows per batch, 50 times the
+batch, warm batches): 300 rows take 0.9-1.1 s (the distributed plan, a
+hash exchange on user_id, 1.3-1.4 s), 10k rows 1.3-2.1 s (1.6-1.8 s), 100k
+rows 5.6-9.9 s (3.2-4.2 s). Past about 10k rows per batch, 50 times the
 design traffic, the one task is slower than the exchange it saves.
 """
 
