@@ -28,10 +28,9 @@ Reference semantics reproduced here:
   engine policy: the shortest whole-second interval whose micro-batch
   still finishes well inside it at the design rate. At small batches an
   event's freshness is about the wait for its trigger plus the batch's
-  fixed cost, so the body keeps that cost down: a batch runs as
-  single-partition jobs (no shuffle), the sink writes run concurrently
-  and every batch is planned alike, so a stream's first batch compiles
-  most of what the later ones reuse. Tests use
+  fixed cost, so the body keeps that cost down: the sink writes run
+  concurrently and every batch is planned alike, so a stream's first
+  batch compiles most of what the later ones reuse. Tests use
   `availableNow` for determinism.
 - F7 dimension dedup — the Devices sink upserts first-write-wins per
   deviceId into a PK'd table (reference
@@ -50,21 +49,15 @@ reach (event time >= max - late delay - window) and at most
 85 of them per key (the reference's 85-event cap,
 README.MD:152-154).
 
-Scale notes: a micro-batch is scored in one task. The scoring input
-(on-time rows plus tail k-1) is coalesced to one partition, so Catalyst
-plans no shuffle for the window or the devices dedup, and bronze (read
-from the same cached, coalesced batch), telemetry and the tail each write
-one file per batch, the dimension one per batch with new keys. One
-persisted window pass feeds telemetry, devices and the next tail; the
-carried max rides on the bronze write as an `Observation` (no extra job).
-The dimension anti-join broadcasts the stored key set; the telemetry
-partitions are what the sync worker tails. The plan was sized on the
-design traffic, 100 events/s or about 200 rows per 2 s batch. Its ceiling,
-measured with the bare writer on 4 cores (5020 keys, 2 s of event time per
-batch, warm batches): 300 rows take 0.9-1.1 s (the distributed plan, a
-hash exchange on user_id, 1.3-1.4 s), 10k rows 1.3-2.1 s (1.6-1.8 s), 100k
-rows 5.6-9.9 s (3.2-4.2 s). Past about 10k rows per batch, 50 times the
-design traffic, the one task is slower than the exchange it saves.
+Scale notes: one persisted window pass per micro-batch feeds telemetry,
+devices and the next tail; the carried max rides on the bronze write as
+an `Observation` (no extra job). The dimension anti-join broadcasts the
+stored key set; bronze/telemetry appends are partitioned parquet writes,
+and the telemetry partitions are what the sync worker tails. At the
+design rate, 100 events/s, a 2 s batch scores its ~200 new rows plus a
+tail that fills to about 11k rows (120 s of rows, 85 per hot key) within
+two minutes of a start; the bare writer on 4 cores then takes 1.0-1.4 s
+a batch, and 1.2-1.4 s for a catch-up batch holding 60 s of backlog.
 """
 
 from __future__ import annotations
@@ -96,10 +89,10 @@ from azure_iot_realtime_data_pipeline_spark.operators.windows import (
 
 WATERMARK_DELAY = f"{LATE_TOLERANCE_SECONDS} seconds"
 #: F5 policy (module docstring): at 100 events/s on 4 cores a 2 s
-#: micro-batch (200 rows) takes about 0.7-1.3 s and the first window
-#: batch after a start 0.9-1.6 s, so every batch starts on the 2 s grid;
-#: with a shuffle in the window and the dedup, 2 s batches took up to
-#: 1.7 s and slid off the grid in 2 of 10 runs
+#: micro-batch (200 rows) takes about 0.9-1.4 s and the first window
+#: batch after a start 1.3-1.7 s; in 2 of 10 runs a slow start put the
+#: first window batches 0.1-0.4 s off the 2 s grid, back on it within two
+#: batches. Once the tail is full (about 11k rows) a batch takes 1.0-1.4 s
 TRIGGER_INTERVAL = "2 seconds"
 
 #: the scorer's retained rows: what a later row's window needs of them
@@ -128,8 +121,7 @@ def upsert_devices(batch: DataFrame, devices_dir: str) -> None:
     New keys only: batch-local first-value dedup, anti-join against the
     stored dimension (an empty directory for a new dimension), append.
     The stored side stays small (one row per device), so the anti-join
-    broadcasts. On the single-partition input of `multi_sink_batch_writer`
-    the dedup needs no shuffle and a batch with new keys appends one file.
+    broadcasts.
     """
     devices = first_value_per_key(
         batch.select("deviceId", F.col("enqueuedTime").alias("firstSeen")),
@@ -247,24 +239,22 @@ def multi_sink_batch_writer(
     2. rows older than the carried max (through batch k-1) minus
        LATE_TOLERANCE_SECONDS are dropped (counted in the tail's
        `_carry.json`);
-    3. the on-time rows, unioned with tail k-1 and coalesced to one
-       partition, are scored in one persisted window pass:
-       `spike_dip_score` over the 60 s `trailing_window(ts_sec, user_id)`;
+    3. the on-time rows, unioned with tail k-1, are scored in one
+       persisted window pass: `spike_dip_score` over the 60 s
+       `trailing_window(ts_sec, user_id)`;
     4. telemetry and devices take the new rows of that pass, and tail k
        its rows within window + late tolerance of the new max, at most
        DEFAULT_HISTORY_SIZE (85) per key.
 
     Write order: bronze, telemetry and devices are independent and are
     issued concurrently, each from its own thread; tail k follows once
-    all three are done, since it needs bronze's `Observation`. Bronze
-    and the scoring pass read one cached, single-partition copy of the
-    raw batch: the source is scanned once, so the query's progress
-    counts each input row once. The threads inherit the query's job
-    group (so `query.stop()` cancels their jobs) and end before the body
-    returns; an error in any write is raised after the others finished.
-    A fresh stream reads an empty tail and a new dimension an empty
-    directory, so every batch is planned alike (adaptive execution still
-    drops the anti-join against an empty dimension at run time).
+    all three are done, since it needs bronze's `Observation`. The
+    threads inherit the query's job group (so `query.stop()` cancels
+    their jobs) and end before the body returns; an error in any write
+    is raised after the others finished. A fresh stream reads an empty
+    tail and a new dimension an empty directory, so every batch is
+    planned alike (adaptive execution still drops the anti-join against
+    an empty dimension at run time).
 
     Scores equal the batch operator's over the whole on-time stream for
     input where rows sharing an epoch second arrive in one micro-batch
@@ -318,14 +308,10 @@ def multi_sink_batch_writer(
         cut_us = _MIN_LONG if carried_us is None else carried_us - late_us
         late = F.unix_micros("ts") < F.lit(cut_us)
         obs = Observation()
-        # one partition: the window and the devices dedup need no shuffle;
-        # bronze and the scoring pass share one scan of the batch's files
-        raw = batch.coalesce(1)
         fresh = (
-            raw.filter(~late & F.col("user_id").isNotNull())
+            batch.filter(~late & F.col("user_id").isNotNull())
             .select("event_id", "ts", "user_id", "value", F.lit(True).alias("_new"))
             .unionByName(tail.withColumn("_new", F.lit(False)))
-            .coalesce(1)
         )
         scored = with_epoch_seconds(fresh, "ts").select(
             "*", score.alias("Score"), is_anom.alias("Anomaly"), newer.alias("_newer")
@@ -340,7 +326,7 @@ def multi_sink_batch_writer(
 
         def bronze() -> None:  # A3 bronze raw
             _write_batch_scoped(
-                raw.observe(
+                batch.observe(
                     obs,
                     F.max(F.unix_micros("ts")).alias("max_us"),
                     F.count(F.when(late, 1)).alias("late_rows"),
@@ -357,7 +343,7 @@ def multi_sink_batch_writer(
 
         # one source scan and one scoring pass: whichever write reaches a
         # partition first fills the cache, the others wait for its block
-        raw.persist()
+        batch.persist()
         scored.persist()
         try:
             _concurrently(
@@ -379,7 +365,7 @@ def multi_sink_batch_writer(
             )
         finally:
             scored.unpersist()
-            raw.unpersist()
+            batch.unpersist()
 
     return write
 
