@@ -26,10 +26,10 @@ Reference semantics reproduced here:
   (PushTelemetryFunction.cs:20-23) is the SYNC worker's, modelled by the
   `http_sink.incremental_push` loop. `TRIGGER_INTERVAL` is therefore an
   engine policy: the shortest whole-second interval whose micro-batch
-  still finishes well inside it at the design rate. At small batches an
-  event's freshness is about the wait for its trigger plus the batch's
-  fixed cost, so the body keeps that cost down: the sink writes run
-  concurrently and every batch is planned alike, so a stream's first
+  still finishes inside it at the design rate on a quiet host. At small
+  batches an event's freshness is about the wait for its trigger plus the
+  batch's fixed cost, so the body keeps that cost down: the sink writes
+  run concurrently and every batch is planned alike, so a stream's first
   batch compiles most of what the later ones reuse. Tests use
   `availableNow` for determinism.
 - F7 dimension dedup — the Devices sink upserts first-write-wins per
@@ -56,8 +56,11 @@ stored key set; bronze/telemetry appends are partitioned parquet writes,
 and the telemetry partitions are what the sync worker tails. At the
 design rate, 100 events/s, a 2 s batch scores its ~200 new rows plus a
 tail that fills to about 11k rows (120 s of rows, 85 per hot key) within
-two minutes of a start; the bare writer on 4 cores then takes 1.0-1.4 s
-a batch, and 1.2-1.4 s for a catch-up batch holding 60 s of backlog.
+two minutes of a start. The bare writer on 4 cores then takes a median
+0.9-1.2 s a batch, and a catch-up batch after a stop takes 0.9-1.4 s
+for 60 s of backlog and 2.2 s for 300 s. Batches of 300, 10k and 100k
+new rows (2 s of event time each, the tail holding up to six earlier
+batches) take 1.3-1.6, 1.5-1.8 and 2.8-4.2 s.
 """
 
 from __future__ import annotations
@@ -89,10 +92,11 @@ from azure_iot_realtime_data_pipeline_spark.operators.windows import (
 
 WATERMARK_DELAY = f"{LATE_TOLERANCE_SECONDS} seconds"
 #: F5 policy (module docstring): at 100 events/s on 4 cores a 2 s
-#: micro-batch (200 rows) takes about 0.9-1.4 s and the first window
-#: batch after a start 1.3-1.7 s; in 2 of 10 runs a slow start put the
-#: first window batches 0.1-0.4 s off the 2 s grid, back on it within two
-#: batches. Once the tail is full (about 11k rows) a batch takes 1.0-1.4 s
+#: micro-batch (200 rows) takes about 0.9-1.4 s on a quiet host, also
+#: once the tail is full (about 11k rows). On a busy host (1-8% CPU
+#: steal) it takes 1.2-2.2 s, so batches can start up to 0.8 s off
+#: the 2 s grid, the first ones after a start most often; freshness
+#: still beats the 3 s trigger's there
 TRIGGER_INTERVAL = "2 seconds"
 
 #: the scorer's retained rows: what a later row's window needs of them
