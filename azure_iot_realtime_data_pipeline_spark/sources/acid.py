@@ -558,7 +558,7 @@ def merge_upsert(
     last-write-wins, NULLs last so a timestamped row beats an
     untimestamped one); without it, one arbitrary row per key is kept
     (`dropDuplicates`) — callers that need a deterministic winner must
-    either pre-dedup (as :func:`upsert_devices_merge` does) or pass
+    either pre-dedup (e.g. `latest_value_per_key`) or pass
     `order_by` (r7 ADVICE: the bare dropDuplicates made the merged
     value nondeterministic for multi-row-per-key batches).
 

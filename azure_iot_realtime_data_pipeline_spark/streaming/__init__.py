@@ -8,8 +8,9 @@ Binds the batch-proven operator semantics to `readStream`:
 - pipeline.py  — single-pass multi-sink foreachBatch: raw bronze, far-late
                  drop, batch spike/dip over a retained tail, telemetry and
                  devices (F1-F5/F7)
-- windows_stream.py — streaming session/tumbling/hopping aggregation
-                 (K1-K3 streaming forms, batch-equivalence tested)
+- windows_stream.py — more than 20 streaming twins of batch operators
+                 (session/tumbling/hopping K1-K3, as-of, dedup, sketches,
+                 event-time policy and more), batch-equivalence tested
 - http_sink.py — chunked, paced HTTP row push tailing the telemetry sink
                  by commit order, last-pushed-batch cell (A8/A9/F6/F8/F9)
 """

@@ -22,9 +22,12 @@ Reproduces the reference .NET sync worker's serve path
       directory and launches no Spark job.
 - F9  initial-load mode: every committed batch, no lookback (cs:37-86).
 
-The sink must be `batch_id=`-partitioned, as `streaming/pipeline.py`
-writes it; partitions appear whole (Spark renames a batch's partition
-into place at job commit), in batch order.
+The sink has `streaming/pipeline.py`'s layout, one `batch_id=<k>/`
+directory per micro-batch, committed in batch order. A directory exists
+while its write job runs, so the tick reads only those that hold
+Spark's `_SUCCESS` file (`pipeline.committed_batches`). That needs
+`mapreduce.fileoutputcommitter.marksuccessfuljobs` left at its default,
+true: with it off, no batch ever counts as committed.
 
 The poster is injected (any callable `(json_rows: list[str]) -> None`
 that raises on failure), so tests use an in-memory collector and
@@ -47,10 +50,16 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from azure_iot_realtime_data_pipeline_spark.streaming.pipeline import (
+    batch_path,
+    committed_batches,
+)
+
 BATCH_SIZE = 500
 PACE_SECONDS = 0.2
 DEFAULT_LOOKBACK = timedelta(hours=1)
-_PARTITION = "batch_id="
+#: the pushed rows' event time: the lookback filter and the push order
+TS_COL = "enqueuedTime"
 
 Poster = Callable[[list[str]], None]
 
@@ -120,25 +129,12 @@ def write_cell(state_path: str, batch_id: int) -> None:
     os.replace(tmp, state_path)
 
 
-def committed_batches(sink_dir: str, above: int | None = None) -> list[int]:
-    """Batch ids of the sink's `batch_id=<k>` partitions above `above`,
-    ascending; a directory listing, no Spark job."""
-    try:
-        names = os.listdir(sink_dir)
-    except FileNotFoundError:
-        return []
-    ids = sorted(int(n[len(_PARTITION):]) for n in names if n.startswith(_PARTITION))
-    return [k for k in ids if above is None or k > above]
-
-
 def incremental_push(
     spark: SparkSession,
     telemetry_dir: str,
     state_path: str,
     poster: Poster,
-    ts_col: str = "enqueuedTime",
     initial_load: bool = False,
-    now: datetime | None = None,
     batch_size: int = BATCH_SIZE,
     pace_seconds: float = PACE_SECONDS,
 ) -> int:
@@ -157,13 +153,12 @@ def incremental_push(
     if not batches:
         return 0
     df = spark.read.option("basePath", telemetry_dir).parquet(
-        *(os.path.join(telemetry_dir, f"{_PARTITION}{k}") for k in batches)
+        *(batch_path(telemetry_dir, k) for k in batches)
     )
     if last is None and not initial_load:
-        start = (now or datetime.now(timezone.utc)) - DEFAULT_LOOKBACK
-        df = df.filter(F.col(ts_col) > F.lit(start))
+        df = df.filter(F.col(TS_COL) > F.lit(datetime.now(timezone.utc) - DEFAULT_LOOKBACK))
     sent = push_rows(
-        df.orderBy(F.col(ts_col).asc()), poster, batch_size=batch_size, pace_seconds=pace_seconds
+        df.orderBy(F.col(TS_COL).asc()), poster, batch_size=batch_size, pace_seconds=pace_seconds
     )
     write_cell(state_path, batches[-1])
     return sent

@@ -39,9 +39,18 @@ Reference semantics reproduced here:
   On a transactional store this is a Delta/JDBC MERGE; the parquet form
   keeps the same semantics for the local stand.
 
-The retained tail (the state of the scorer) is a parquet file set under
-`<checkpoint>/tail/batch_id=<k>/`, committed by a `_carry.json` marker
-that also holds the carried max event time. Batch k reads the tail of
+Layout: batch k writes each of bronze, telemetry and the scorer's tail
+as the directory `<dir>/batch_id=<k>/`, overwritten whole
+(`write_batch`), so a replayed batch rewrites its own files instead of
+appending duplicates, and `spark.read.parquet(dir)` reads `batch_id`
+back as an int partition column. The directory exists while its job
+runs; it counts as committed once Spark's `_SUCCESS` file is in it
+(`committed_batches`, which the sync tick lists). That needs
+`mapreduce.fileoutputcommitter.marksuccessfuljobs` at its default, true.
+
+The retained tail (the state of the scorer) lives under
+`<checkpoint>/tail/`, and its own commit marker, `_carry.json`, also
+holds the carried max event time. Batch k reads the tail of
 batch k-1, so a replayed batch re-reads exactly the state it first saw;
 the tail shares the checkpoint's lifecycle (a fresh checkpoint starts
 with no history). It keeps the rows a later on-time row's window can
@@ -52,11 +61,12 @@ README.MD:152-154).
 Scale notes: one persisted window pass per micro-batch feeds telemetry,
 devices and the next tail; the carried max rides on the bronze write as
 an `Observation` (no extra job). The dimension anti-join broadcasts the
-stored key set; bronze/telemetry appends are partitioned parquet writes,
-and the telemetry partitions are what the sync worker tails. At the
-design rate, 100 events/s, a 2 s batch scores its ~200 new rows plus a
-tail that fills to about 11k rows (120 s of rows, 85 per hot key) within
-two minutes of a start. The bare writer on 4 cores then takes a median
+stored key set; bronze and telemetry are one parquet write each per
+batch, and the committed telemetry partitions are what the sync worker
+tails. At the design rate, 100 events/s, a 2 s batch scores its ~200
+new rows plus a tail that fills to about 11k rows (120 s of rows, 85
+per hot key) within two minutes of a start. The bare writer on 4 cores
+then takes a median
 0.9-1.2 s a batch, and a catch-up batch after a stop takes 0.9-1.4 s
 for 60 s of backlog and 2.2 s for 300 s. Batches of 300, 10k and 100k
 new rows (2 s of event time each, the tail holding up to six earlier
@@ -84,7 +94,6 @@ from azure_iot_realtime_data_pipeline_spark.operators.windows import (
     DEFAULT_HISTORY_SIZE,
     DEFAULT_WINDOW_SECONDS,
     first_value_per_key,
-    latest_value_per_key,
     spike_dip_score,
     trailing_window,
     with_epoch_seconds,
@@ -104,6 +113,7 @@ TAIL_SCHEMA = "event_id long, ts timestamp, user_id long, value double"
 _CARRY_FILE = "_carry.json"
 _EMPTY_TAIL = "empty"
 _MIN_LONG = -(2**63)
+_PARTITION = "batch_id="
 
 
 def curated_stream(events: DataFrame) -> DataFrame:
@@ -140,44 +150,30 @@ def upsert_devices(batch: DataFrame, devices_dir: str) -> None:
     ).parquet(devices_dir)
 
 
-def upsert_devices_merge(batch: DataFrame, devices_table_dir: str) -> dict:
-    """F7 with TRUE MERGE semantics — the Delta `WHEN MATCHED UPDATE`
-    slot tracked as blocked since r3 (delta-spark absent from the
-    image, pip-verified every round): latest-metadata-wins per device
-    onto the manifest-committed table (sources/acid.py), whose atomic
-    manifest rename is the commit protocol and whose footer-stats file
-    skipping makes each micro-batch rewrite only the files its devices
-    live in. Mirrors the reference's keyed upsert into the PK'd Devices
-    table (reference iot-stream-analytics-query.sql:53-61;
-    README.MD:159-165). Idempotent per batch content: re-merging the
-    same rows yields the same table (last-write-wins on the same
-    values), so foreachBatch retries after a crash are safe."""
-    from azure_iot_realtime_data_pipeline_spark.sources.acid import merge_upsert
+def batch_path(out_dir: str, batch_id: int) -> str:
+    return os.path.join(out_dir, f"{_PARTITION}{batch_id}")
 
-    devices = latest_value_per_key(
-        batch.select("deviceId", F.col("enqueuedTime").alias("lastSeen")),
-        key="deviceId",
-        ts_col="lastSeen",
+
+def write_batch(df: DataFrame, out_dir: str, batch_id: int) -> None:
+    """Overwrite `<out_dir>/batch_id=<batch_id>/` with `df` (the layout of
+    the module docstring): a replay rewrites the same directory."""
+    df.write.mode("overwrite").parquet(batch_path(out_dir, batch_id))
+
+
+def committed_batches(out_dir: str, above: int | None = None) -> list[int]:
+    """Batch ids above `above`, ascending, whose `batch_id=<k>` directory
+    holds `_SUCCESS`; a directory listing, no Spark job."""
+    try:
+        names = os.listdir(out_dir)
+    except FileNotFoundError:
+        return []
+    ids = (int(n[len(_PARTITION):]) for n in names if n.startswith(_PARTITION))
+    return sorted(
+        k
+        for k in ids
+        if (above is None or k > above)
+        and os.path.exists(os.path.join(batch_path(out_dir, k), "_SUCCESS"))
     )
-    return merge_upsert(devices, devices_table_dir, key="deviceId")
-
-
-def _write_batch_scoped(batch: DataFrame, batch_id: int, out_dir: str) -> None:
-    """Idempotent parquet append: each micro-batch owns a `batch_id=`
-    partition and replay OVERWRITES exactly that partition (dynamic
-    partition-overwrite), so a batch replayed after a mid-fan-out crash
-    rewrites its own files instead of appending duplicates."""
-    (
-        batch.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(out_dir)
-    )
-
-
-def _tail_path(tail_dir: str, batch_id: int) -> str:
-    return os.path.join(tail_dir, f"batch_id={batch_id}")
 
 
 def _read_tail(spark, tail_dir: str, batch_id: int) -> tuple[DataFrame, int | None]:
@@ -185,7 +181,7 @@ def _read_tail(spark, tail_dir: str, batch_id: int) -> tuple[DataFrame, int | No
     When that batch left no committed tail (a fresh stream) the rows come
     from an empty directory and the max is None: every batch reads its
     tail through the same plan."""
-    path = _tail_path(tail_dir, batch_id)
+    path = batch_path(tail_dir, batch_id)
     try:
         with open(os.path.join(path, _CARRY_FILE)) as fh:
             max_us = json.load(fh)["max_us"]
@@ -199,13 +195,13 @@ def _commit_tail(tail: DataFrame, tail_dir: str, batch_id: int, carry: dict) -> 
     """Write this batch's tail, then its `_carry.json` marker (the commit
     point: a tail without one is never read), then drop the tails no
     replay can need any more (batch k-1 is committed while k runs)."""
-    path = _tail_path(tail_dir, batch_id)
-    tail.write.mode("overwrite").parquet(path)
+    write_batch(tail, tail_dir, batch_id)
+    path = batch_path(tail_dir, batch_id)
     tmp = os.path.join(path, _CARRY_FILE + ".tmp")
     with open(tmp, "w") as fh:
         json.dump(carry, fh)
     os.replace(tmp, os.path.join(path, _CARRY_FILE))
-    for old in glob.glob(os.path.join(tail_dir, "batch_id=*")):
+    for old in glob.glob(os.path.join(tail_dir, _PARTITION + "*")):
         if int(old.rsplit("=", 1)[1]) < batch_id - 1:
             shutil.rmtree(old, ignore_errors=True)
 
@@ -232,7 +228,6 @@ def multi_sink_batch_writer(
     devices_dir: str,
     telemetry_dir: str,
     tail_dir: str,
-    devices_mode: str = "anti_join",
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body over the raw event stream (F1-F4, F7).
 
@@ -266,32 +261,12 @@ def multi_sink_batch_writer(
 
     Exactly-once per sink under micro-batch replay: Structured Streaming
     re-runs a batch after a crash, so each sink must absorb the same
-    (batch_id, rows) twice. Bronze/telemetry do it by batch-id-scoped
-    dynamic partition overwrite, the tail by its batch-id-scoped commit
-    marker (replay re-reads tail k-1 and rewrites tail k), and the
-    Devices upsert is idempotent in both modes. On a transactional store
-    the equivalent is Delta `MERGE` / txn-log `txnAppId+txnVersion`.
-
-    `devices_mode` selects the A4/F7 dimension sink:
-
-    - ``"anti_join"`` (default, reference-faithful): first-write-wins
-      append to a plain parquet dir — replayed keys are already stored
-      and anti-join away. Read with ``spark.read.parquet``.
-    - ``"merge"``: TRUE keyed MERGE (WHEN MATCHED UPDATE lastSeen,
-      insert new) onto the manifest-committed ACID table
-      (:func:`upsert_devices_merge` over ``sources/acid.py``) — the
-      Delta-MERGE semantics the reference's PK'd SQL table gets from
-      its upsert, with optimistic-concurrency commits and file-skipping
-      rewrites. Read with ``acid.read_table``; idempotent under replay
-      because re-merging identical rows lands identical values.
-
-    Layout migration note: sinks written by the pre-batch-id layout
-    (loose part files at the root) cannot be mixed with the partitioned
-    layout — point new streams at fresh sink directories (or move old
-    files under a `batch_id=-1/` subdir) before upgrading.
+    (batch_id, rows) twice. Bronze, telemetry and tail k overwrite their
+    own `batch_id=k` directory (module docstring); replay re-reads tail
+    k-1, whose `_carry.json` is in, and the devices anti-join skips the
+    keys the first attempt stored. On a transactional store the
+    equivalent is Delta `MERGE` / txn-log `txnAppId+txnVersion`.
     """
-    if devices_mode not in ("anti_join", "merge"):
-        raise ValueError(f"unknown devices_mode: {devices_mode!r}")
     late_us = LATE_TOLERANCE_SECONDS * 1_000_000
     keep_s = DEFAULT_WINDOW_SECONDS + LATE_TOLERANCE_SECONDS
     w = trailing_window("ts_sec", key="user_id", window_seconds=DEFAULT_WINDOW_SECONDS)
@@ -329,21 +304,15 @@ def multi_sink_batch_writer(
         )
 
         def bronze() -> None:  # A3 bronze raw
-            _write_batch_scoped(
+            write_batch(
                 batch.observe(
                     obs,
                     F.max(F.unix_micros("ts")).alias("max_us"),
                     F.count(F.when(late, 1)).alias("late_rows"),
                 ),
-                batch_id,
                 bronze_dir,
+                batch_id,
             )
-
-        def devices() -> None:  # A4/F7 dimension
-            if devices_mode == "merge":
-                upsert_devices_merge(curated, devices_dir)
-            else:
-                upsert_devices(curated, devices_dir)
 
         # one source scan and one scoring pass: whichever write reaches a
         # partition first fills the cache, the others wait for its block
@@ -353,8 +322,8 @@ def multi_sink_batch_writer(
             _concurrently(
                 spark,
                 bronze,
-                lambda: _write_batch_scoped(curated, batch_id, telemetry_dir),  # A5 fact
-                devices,
+                lambda: write_batch(curated, telemetry_dir, batch_id),  # A5 fact
+                lambda: upsert_devices(curated, devices_dir),  # A4/F7 dimension
             )
             stats = obs.get
             max_us = max((v for v in (carried_us, stats["max_us"]) if v is not None), default=None)
@@ -381,22 +350,16 @@ def run_multi_sink(
     telemetry_dir: str,
     checkpoint_dir: str,
     available_now: bool = False,
-    trigger_interval: str = TRIGGER_INTERVAL,
-    devices_mode: str = "anti_join",
 ) -> StreamingQuery:
     """Start the fan-out over `curated_stream(events)`; the scorer's tail
     lives under `<checkpoint_dir>/tail`."""
     writer = curated.writeStream.foreachBatch(
         multi_sink_batch_writer(
-            bronze_dir,
-            devices_dir,
-            telemetry_dir,
-            os.path.join(checkpoint_dir, "tail"),
-            devices_mode=devices_mode,
+            bronze_dir, devices_dir, telemetry_dir, os.path.join(checkpoint_dir, "tail")
         )
     ).option("checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)
     else:
-        writer = writer.trigger(processingTime=trigger_interval)
+        writer = writer.trigger(processingTime=TRIGGER_INTERVAL)
     return writer.start()

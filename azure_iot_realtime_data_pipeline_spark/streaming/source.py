@@ -4,10 +4,12 @@ The reference consumes a 4-partition Event Hub
 (reference terraform/main-example.tf:108-118;
 iot-stream-analytics-query.sql:2-5). The local analog replays the
 driver's `events` parquet through Spark's file stream source: the table
-is staged into N chronological files, and `maxFilesPerTrigger=1` makes
-each file one micro-batch — a deterministic stand-in for partitioned,
-time-ordered hub delivery. In production this module is the one swap
-point: `readStream.format("kafka")` with the same downstream plan.
+is staged into N chronological files, and the tests' setting
+`maxFilesPerTrigger=1` makes each file one micro-batch — a deterministic
+stand-in for partitioned, time-ordered hub delivery. The benchmark's
+fleet reads without a bound (`max_files_per_trigger=None`), so a backlog
+is one batch. In production this module is the one swap point:
+`readStream.format("kafka")` with the same downstream plan.
 
 Schema is always explicit (streaming sources never infer), mirroring the
 reference's schema-on-read-with-declared-shape policy (SURVEY.md §1.3).
@@ -27,8 +29,8 @@ from azure_iot_realtime_data_pipeline_spark.sources.batch import load_table
 def _bucket_col(order_expr: Column, lo: int, span: int, num_files: int) -> Column:
     """Shared replay-bucket rule: proportional split of `order_expr`
     over [lo, lo+span] into `num_files` buckets, last bucket capped.
-    One definition — the three stagers below must never drift on the
-    bucket-edge arithmetic (review r7)."""
+    One definition — every stager below uses it, so none drifts on the
+    bucket-edge arithmetic."""
     return F.least(
         F.lit(num_files - 1),
         ((order_expr - F.lit(lo)) * num_files / span).cast("int"),
@@ -48,59 +50,37 @@ def _write_replay_file(df: DataFrame, out_dir: str, i: int) -> None:
 
 
 def stage_replay_dir(
-    spark: SparkSession, sf_dir: str, out_dir: str, num_files: int = 4
-) -> str:
-    """Stage `events` as `num_files` chronological parquet files.
-
-    Files split on event-time buckets (never inside a second), so replay
-    order == event-time order and rows sharing a timestamp land in one
-    micro-batch — the precondition for causal parity with the batch
-    RANGE-frame oracle (see anomaly.py). File mtimes are set in bucket
-    order because the file source sorts by modification time.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        F.min(F.unix_timestamp("ts")).alias("lo"), F.max(F.unix_timestamp("ts")).alias("hi")
-    ).collect()[0]
-    lo = int(bounds["lo"])
-    span = max(int(bounds["hi"]) - lo, 1)
-    staged = ev.withColumn(
-        "_bucket", _bucket_col(F.unix_timestamp("ts"), lo, span, num_files)
-    )
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(num_files):
-        _write_replay_file(
-            staged.filter(F.col("_bucket") == i).drop("_bucket"), out_dir, i
-        )
-    return out_dir
-
-
-def stage_replay_dir_arrival(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
     num_files: int = 4,
-    order_col: str = "event_id",
+    arrival_order: bool = False,
 ) -> str:
-    """Stage `events` as `num_files` ARRIVAL-ordered parquet files.
+    """Stage `events` as `num_files` parquet files, replayed in bucket order.
 
-    Files split on `order_col` (the arrival sequence — event_id encodes
-    the order the pipeline received each event), so replay order ==
-    arrival order even where event TIME is out of order. This is the
-    precondition for parity with the batch arrival-order operators
-    (F3 adjust_clamp / drop_late, which run over `ORDER BY event_id`):
-    the reference's out-of-order policy is defined over arrival order
-    (reference terraform/main-example.tf:133-136), not event time.
+    By default files split on event-time buckets (never inside a second),
+    so replay order == event-time order and rows sharing a timestamp land
+    in one micro-batch — the precondition for causal parity with the
+    batch RANGE-frame oracle (see anomaly.py).
+
+    `arrival_order=True` splits on `event_id` instead (the arrival
+    sequence — event_id encodes the order the pipeline received each
+    event), so replay order == arrival order even where event TIME is out
+    of order. That is the precondition for parity with the batch
+    arrival-order operators (F3 adjust_clamp / drop_late, which run over
+    `ORDER BY event_id`): the reference's out-of-order policy is defined
+    over arrival order (reference terraform/main-example.tf:133-136), not
+    event time.
+
+    File mtimes are set in bucket order because the file source sorts by
+    modification time.
     """
     ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        F.min(order_col).alias("lo"), F.max(order_col).alias("hi")
-    ).collect()[0]
+    order = F.col("event_id") if arrival_order else F.unix_timestamp("ts")
+    bounds = ev.agg(F.min(order).alias("lo"), F.max(order).alias("hi")).collect()[0]
     lo = int(bounds["lo"])
     span = max(int(bounds["hi"]) - lo, 1)
-    staged = ev.withColumn(
-        "_bucket", _bucket_col(F.col(order_col), lo, span, num_files)
-    )
+    staged = ev.withColumn("_bucket", _bucket_col(order, lo, span, num_files))
     os.makedirs(out_dir, exist_ok=True)
     for i in range(num_files):
         _write_replay_file(

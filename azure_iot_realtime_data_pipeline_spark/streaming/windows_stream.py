@@ -682,7 +682,7 @@ def adjust_clamp_stream(
     aggregation.
 
     Parity contract (tested): replayed in arrival order (`id_col`
-    buckets — `stage_replay_dir_arrival`), every emitted `adjusted_ts`
+    buckets — `stage_replay_dir(arrival_order=True)`), every emitted `adjusted_ts`
     equals the batch `operators.eventtime.adjust_clamp` (the oracled
     `q_adjust_clamp`) on the same data. `watermark` stays None for the
     pure-Adjust policy (clamp, never drop); set it to ALSO drop events

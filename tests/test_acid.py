@@ -116,44 +116,6 @@ def test_manifest_commit_is_atomic_rename(spark, tmp_path):
         assert not name.endswith(".tmp")  # no torn commit left behind
 
 
-def test_upsert_devices_merge_latest_wins_across_batches(spark, tmp_path):
-    """F7 MERGE variant: device dev-1's metadata is UPDATED by a later
-    batch (the semantics the first-write-wins anti-join cannot express),
-    dev-2 is inserted; re-merging the same batch is idempotent."""
-    import datetime as dt
-
-    from azure_iot_realtime_data_pipeline_spark.streaming.pipeline import (
-        upsert_devices_merge,
-    )
-
-    d = str(tmp_path / "devices")
-    t0 = dt.datetime(2024, 1, 1)
-    b1 = spark.createDataFrame(
-        [("dev-1", t0), ("dev-1", t0 + dt.timedelta(seconds=5))],
-        "deviceId string, enqueuedTime timestamp",
-    )
-    upsert_devices_merge(b1, d)
-    b2 = spark.createDataFrame(
-        [("dev-1", t0 + dt.timedelta(minutes=1)), ("dev-2", t0)],
-        "deviceId string, enqueuedTime timestamp",
-    )
-    stats = upsert_devices_merge(b2, d)
-    got = {
-        r.deviceId: r.lastSeen for r in acid.read_table(spark, d).collect()
-    }
-    assert got == {
-        "dev-1": t0 + dt.timedelta(minutes=1),
-        "dev-2": t0,
-    }
-    # idempotent retry (foreachBatch redelivery after a crash)
-    upsert_devices_merge(b2, d)
-    got2 = {
-        r.deviceId: r.lastSeen for r in acid.read_table(spark, d).collect()
-    }
-    assert got2 == got
-    assert stats["version"] == 2
-
-
 def test_merge_drops_null_key_updates(spark, tmp_path):
     """NULL merge keys model a PK violation: dropped up front, never a
     sort/bisect crash (review r7 pass 2)."""

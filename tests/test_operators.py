@@ -2042,7 +2042,7 @@ def test_char_entropy_boundaries(spark):
     assert abs(got[7]) < 1e-6
 
 
-def test_char_entropy_expr_and_column_paths_agree(spark):
+def test_char_entropy_expr_and_column_paths_agree(spark, sf_smoke):
     """r13 optimization gate: char_entropy_bits' single-F.expr fast path
     (column passed by name) must be value-identical to the Column-DSL
     path on real corpus text plus the edge cases (NULL, empty, mixed
@@ -2053,7 +2053,7 @@ def test_char_entropy_expr_and_column_paths_agree(spark):
     from azure_iot_realtime_data_pipeline_spark.sources.batch import load_table
     from pyspark.sql import functions as F
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = load_table(spark, sf_smoke, "documents")
     extra = spark.createDataFrame(
         [(100001, None), (100002, ""), (100003, "aA 1!#")],
         "doc_id long, text string",

@@ -22,6 +22,7 @@ from azure_iot_realtime_data_pipeline_spark.streaming.pipeline import (
     curated_stream,
     multi_sink_batch_writer,
     run_multi_sink,
+    write_batch,
 )
 from azure_iot_realtime_data_pipeline_spark.streaming.source import (
     replay_events,
@@ -249,13 +250,13 @@ def test_multi_sink_restart_soak(spark, tmp_path, monkeypatch):
 
     upsert = pipeline.upsert_devices
     upserts = []
-    write_scoped = pipeline._write_batch_scoped
+    write_batch_ = pipeline.write_batch
     telemetry_started = threading.Event()
 
-    def mark_telemetry_write(batch, batch_id, out_dir):
+    def mark_telemetry_write(df, out_dir, batch_id):
         if out_dir == telemetry and batch_id == 2:
             telemetry_started.set()
-        write_scoped(batch, batch_id, out_dir)
+        write_batch_(df, out_dir, batch_id)
 
     def crash_between_sinks(batch, devices_dir):
         upserts.append(1)
@@ -272,11 +273,11 @@ def test_multi_sink_restart_soak(spark, tmp_path, monkeypatch):
         if batch_id == 4 and "tail" not in crashes:
             assert_tail_carried(batch_id)
             crashes.append("tail")
-            tail.write.mode("overwrite").parquet(pipeline._tail_path(tail_dir_, batch_id))
+            write_batch_(tail, tail_dir_, batch_id)
             raise RuntimeError("injected crash before the tail commit")
         commit(tail, tail_dir_, batch_id, carry)
 
-    monkeypatch.setattr(pipeline, "_write_batch_scoped", mark_telemetry_write)
+    monkeypatch.setattr(pipeline, "write_batch", mark_telemetry_write)
     monkeypatch.setattr(pipeline, "upsert_devices", crash_between_sinks)
     monkeypatch.setattr(pipeline, "_commit_tail", crash_before_tail_commit)
 
@@ -329,48 +330,6 @@ def test_multi_sink_restart_soak(spark, tmp_path, monkeypatch):
     )
 
 
-def test_multi_sink_merge_mode_latest_wins_and_replays_clean(
-    spark, replay_dir, tmp_path
-):
-    """devices_mode="merge": the fan-out's dimension sink is the keyed
-    MERGE onto the manifest-committed ACID table — one row per deviceId
-    with the LATEST lastSeen (WHEN MATCHED UPDATE, the Delta semantics
-    the reference's PK'd table gets from its upsert), and a full replay
-    against the existing dimension is idempotent."""
-    from azure_iot_realtime_data_pipeline_spark.sources import acid
-
-    bronze = str(tmp_path / "bm")
-    devices = str(tmp_path / "dm")
-    telemetry = str(tmp_path / "tm")
-    for i in range(2):  # fresh checkpoint -> full replay, same dimension
-        q = run_multi_sink(
-            curated_stream(replay_events(spark, replay_dir)),
-            bronze,
-            devices,
-            telemetry,
-            str(tmp_path / f"ckptm{i}"),
-            available_now=True,
-            devices_mode="merge",
-        )
-        q.awaitTermination(300)
-    d = acid.read_table(spark, devices)
-    assert set(d.columns) == {"deviceId", "lastSeen"}
-    assert d.groupBy("deviceId").count().filter(F.col("count") > 1).count() == 0
-    t = spark.read.parquet(telemetry)
-    want = {
-        (r["deviceId"], r["mx"])
-        for r in t.groupBy("deviceId")
-        .agg(F.max("enqueuedTime").alias("mx"))
-        .collect()
-    }
-    got = {(r["deviceId"], r["lastSeen"]) for r in d.collect()}
-    assert got == want  # LATEST enqueuedTime won, across batches AND replays
-    with pytest.raises(ValueError, match="devices_mode"):
-        multi_sink_batch_writer(
-            bronze, devices, telemetry, str(tmp_path / "tail"), devices_mode="bogus"
-        )
-
-
 def test_devices_upsert_is_first_write_wins(spark, replay_dir, tmp_path):
     """Re-running the stream against an existing dimension adds no rows
     and keeps the original firstSeen (F7 upsert, not append)."""
@@ -414,12 +373,15 @@ def test_incremental_push_watermark_protocol(spark, sf_smoke, tmp_path):
     import json
 
     src = str(tmp_path / "fact")
-    load_table(spark, sf_smoke, "events").select(
-        "event_id",
-        F.col("ts").alias("enqueuedTime"),
-        "value",
-        (F.col("event_id") % 4).alias("batch_id"),
-    ).write.partitionBy("batch_id").parquet(src)
+    events = load_table(spark, sf_smoke, "events")
+    for k in range(4):
+        write_batch(
+            events.filter(F.col("event_id") % 4 == k).select(
+                "event_id", F.col("ts").alias("enqueuedTime"), "value"
+            ),
+            src,
+            k,
+        )
     state = str(tmp_path / "wm.json")
 
     # tick 1: initial load, everything delivered, cell commits
@@ -455,25 +417,31 @@ def test_incremental_push_watermark_protocol(spark, sf_smoke, tmp_path):
     assert http_sink.read_cell(state) == 3
 
 
+def _commit_fact_batch(spark, src, batch_id, ids):
+    """Telemetry batch `batch_id` of the sync tests: one row per id, the
+    id as `telemetryId` and as the second of `enqueuedTime`."""
+    import datetime as dt
+
+    write_batch(
+        spark.createDataFrame(
+            [(i, dt.datetime(2024, 1, 1, 12, 0, i)) for i in ids],
+            "telemetryId long, enqueuedTime timestamp",
+        ),
+        src,
+        batch_id,
+    )
+
+
 def test_sync_tick_reads_only_new_batches(spark, tmp_path):
     """A tick with no batch above the cell lists one directory and runs
     no Spark job; a tick with new batches reads only their partitions."""
-    import datetime as dt
     import json
 
     src = str(tmp_path / "fact")
     state = str(tmp_path / "sync.json")
 
-    def commit_batch(batch_id, ids):
-        spark.createDataFrame(
-            [(i, dt.datetime(2024, 1, 1, 12, 0, i)) for i in ids],
-            "telemetryId long, enqueuedTime timestamp",
-        ).withColumn("batch_id", F.lit(batch_id)).write.mode("append").partitionBy(
-            "batch_id"
-        ).parquet(src)
-
-    commit_batch(0, range(0, 5))
-    commit_batch(1, range(5, 10))
+    _commit_fact_batch(spark, src, 0, range(0, 5))
+    _commit_fact_batch(spark, src, 1, range(5, 10))
     first = http_sink.CollectingPoster()
     assert http_sink.incremental_push(spark, src, state, first, initial_load=True) == 10
 
@@ -489,12 +457,50 @@ def test_sync_tick_reads_only_new_batches(spark, tmp_path):
     # a pushed batch that can no longer be read: a tick that touched it fails
     with open(os.path.join(src, "batch_id=0", "part-garbage.parquet"), "w") as fh:
         fh.write("not parquet")
-    commit_batch(2, range(10, 13))
+    _commit_fact_batch(spark, src, 2, range(10, 13))
     poster = http_sink.CollectingPoster()
     assert http_sink.incremental_push(spark, src, state, poster) == 3
     ids = [json.loads(r)["telemetryId"] for r in poster.rows]
     assert ids == [10, 11, 12]
     assert http_sink.read_cell(state) == 2
+
+
+def test_sync_tick_skips_partition_without_success(spark, sf_smoke, tmp_path):
+    """A `batch_id=` partition counts as committed only once Spark's
+    `_SUCCESS` file is in it: the directory exists while its job still
+    runs, and the tick neither reads it nor moves the cell past it."""
+    import json
+
+    src = str(tmp_path / "fact")
+    state = str(tmp_path / "sync.json")
+
+    _commit_fact_batch(spark, src, 0, range(0, 5))
+    _commit_fact_batch(spark, src, 1, range(5, 10))
+    first = http_sink.CollectingPoster()
+    assert http_sink.incremental_push(spark, src, state, first, initial_load=True) == 10
+    assert http_sink.read_cell(state) == 1
+
+    # batch 2's parquet files are in place but its job has not committed
+    _commit_fact_batch(spark, src, 2, range(10, 13))
+    success = os.path.join(src, "batch_id=2", "_SUCCESS")
+    os.remove(success)
+    assert http_sink.incremental_push(spark, src, state, http_sink.CollectingPoster()) == 0
+    assert http_sink.read_cell(state) == 1
+
+    open(success, "w").close()
+    poster = http_sink.CollectingPoster()
+    assert http_sink.incremental_push(spark, src, state, poster) == 3
+    assert [json.loads(r)["telemetryId"] for r in poster.rows] == [10, 11, 12]
+    assert http_sink.read_cell(state) == 2
+
+    # one fan-out call for batch k commits exactly that telemetry partition
+    telemetry = str(tmp_path / "t")
+    batch = load_table(spark, sf_smoke, "events").orderBy("ts").limit(50)
+    write = multi_sink_batch_writer(
+        str(tmp_path / "b"), str(tmp_path / "d"), telemetry, str(tmp_path / "tail")
+    )
+    write(batch, 5)
+    assert http_sink.committed_batches(telemetry) == [5]
 
 
 def test_serve_path_soak_ingest_to_push(spark, sf_oracle, tmp_path):

@@ -587,15 +587,12 @@ def test_adjust_clamp_stream_matches_batch(spark, sf_smoke, tmp_path):
     over arrival order, and the ts-bucketed replay dir would reorder
     the out-of-order events the clamp exists to fix)."""
     from azure_iot_realtime_data_pipeline_spark.plans.queries import q_adjust_clamp
-    from azure_iot_realtime_data_pipeline_spark.streaming.source import (
-        stage_replay_dir_arrival,
-    )
     from azure_iot_realtime_data_pipeline_spark.streaming.windows_stream import (
         adjust_clamp_stream,
     )
 
-    replay = stage_replay_dir_arrival(
-        spark, sf_smoke, str(tmp_path / "replay_arrival"), num_files=4
+    replay = stage_replay_dir(
+        spark, sf_smoke, str(tmp_path / "replay_arrival"), num_files=4, arrival_order=True
     )
     q = (
         adjust_clamp_stream(replay_events(spark, replay), watermark=None)
@@ -756,15 +753,12 @@ def test_eventtime_policy_stream_matches_batch_on_replay(
     from azure_iot_realtime_data_pipeline_spark.plans.queries import (
         q_eventtime_policy,
     )
-    from azure_iot_realtime_data_pipeline_spark.streaming.source import (
-        stage_replay_dir_arrival,
-    )
     from azure_iot_realtime_data_pipeline_spark.streaming.windows_stream import (
         eventtime_policy_stream,
     )
 
-    replay = stage_replay_dir_arrival(
-        spark, sf_smoke, str(tmp_path / "replay_policy"), num_files=4
+    replay = stage_replay_dir(
+        spark, sf_smoke, str(tmp_path / "replay_policy"), num_files=4, arrival_order=True
     )
     q = (
         eventtime_policy_stream(replay_events(spark, replay))
