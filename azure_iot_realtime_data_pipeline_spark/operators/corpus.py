@@ -876,9 +876,8 @@ def bigram_counts(
     """(w1, w2, n): the corpus bigram count table — the shared core of
     J54's conditional LM and J80's PMI collocations, and (because a
     count table is ADDITIVE) directly maintainable on a stream by
-    Spark's built-in incremental aggregation (windows_stream.
-    bigram_counts_stream), the CMS/HLL twin argument with sum as the
-    merge. Pairs build INSIDE each document's token array (zip with its
+    Spark's built-in incremental aggregation (call it on the streaming
+    frame), the CMS/HLL argument with sum as the merge. Pairs build INSIDE each document's token array (zip with its
     own tail, map-side — no row window) and explode once; ONE shuffle
     to the vocab-bounded count table."""
     toks = tokens(F.col(text_col))

@@ -248,9 +248,9 @@ def hll_sketch(
 
     This is the MERGEABLE form, like `cms_sketch`: sketches of two
     corpora (or successive micro-batches) combine by per-(group,_j) MAX
-    (`hll_merge`), which is also why the streaming twin maintains it
-    with Spark's built-in incremental max-aggregation — state bounded
-    at m = 2^p rows per group, forever. Shape: one map-side projection
+    (`hll_merge`), which is also why it runs unchanged on a streaming
+    frame, maintained by Spark's built-in incremental max-aggregation —
+    state bounded at m = 2^p rows per group, forever. Shape: one map-side projection
     + one groupBy over at most m keys per group; partial aggregation
     collapses each task's stream to <= groups x m partial rows before
     the exchange, so the shuffle is sketch-sized, not data-sized.

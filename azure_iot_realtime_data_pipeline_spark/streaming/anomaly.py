@@ -5,8 +5,10 @@ The reference applies `AnomalyDetection_SpikeAndDip(value, 95, 85,
 (reference stream-analytics/iot-stream-analytics-query.sql:33-44;
 params README.MD:152-154). This module is the streaming binding of the
 deterministic stand-in spec defined in operators/windows.py — SAME
-numbers, different execution: `applyInPandasWithState` carrying a
-bounded per-key history instead of a Catalyst RANGE window.
+numbers, different execution: a fold over the per-key state kernel
+(streaming/carry.py) carrying a bounded history instead of a Catalyst
+RANGE window. The kernel sorts each key's whole micro-batch by
+(ts, event_id) however Spark chunks it, and drops NULL-ts rows.
 
 Parity contract (tested): for in-order input where rows sharing an
 epoch second arrive in one micro-batch AND no key has more than
@@ -39,8 +41,8 @@ Scale notes:
   constant-key opt-in (SURVEY.md §7 hard part 1).
 - Late rows within the retained window still score correctly (their
   trailing window is a filter over retained history). Nothing drops
-  rows later than the watermark: under `GroupStateTimeout.NoTimeout`
-  Spark applies no late-row filter to this operator's input, so a
+  rows later than the watermark: the kernel runs with no state timeout,
+  so Spark applies no late-row filter to this operator's input, and a
   far-late row is scored from whatever history its key retains. The
   pipeline (streaming/pipeline.py) no longer runs this operator: it
   scores each micro-batch with the batch operator over a retained tail
@@ -52,14 +54,9 @@ Scale notes:
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 from decimal import ROUND_HALF_UP, Decimal
-from typing import TYPE_CHECKING
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -70,8 +67,11 @@ from pyspark.sql.types import (
     ArrayType,
 )
 
-if TYPE_CHECKING:  # pragma: no cover
-    pass
+from azure_iot_realtime_data_pipeline_spark.streaming.carry import (
+    fold,
+    fold_stream,
+    round4,
+)
 
 WINDOW_SECONDS = 60
 HISTORY_SIZE = 85
@@ -121,8 +121,7 @@ def _score_one(x: float, window_vals: list[Decimal]) -> tuple[float, int]:
     sd = math.sqrt(var)
     if sd <= abs(mean) * DEGENERATE_REL_SD:
         return 0.0, 0
-    raw = (x - mean) / sd
-    score = math.floor(raw * 10000.0 + 0.5) / 10000.0
+    score = round4((x - mean) / sd)
     return score, int(abs(score) > Z_THRESHOLD)
 
 
@@ -130,55 +129,42 @@ def make_spike_dip_fn(
     window_seconds: int = WINDOW_SECONDS,
     history_size: int | None = HISTORY_SIZE,
 ):
-    """Build the applyInPandasWithState function (picklable closure)."""
+    """Build the (key, pdfs, state) fold callable for `spike_dip_stream`."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            ts_hist, val_hist = state.get
-            hist: list[tuple[int, float]] = list(zip(ts_hist, val_hist))
-        else:
-            hist = []
-
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"], kind="stable")
-            secs = (pdf["ts"].astype("int64") // 1_000_000_000).to_numpy()
-            vals = pdf["value"].to_numpy()
-            scores = [0.0] * len(pdf)
-            flags = [0] * len(pdf)
-            # group by distinct second: admit ALL rows of a second into
-            # history before scoring any of them — this is what makes the
-            # causal evaluation match the batch RANGE frame's tie handling
-            i = 0
-            while i < len(pdf):
-                j = i
-                sec = int(secs[i])
-                while j < len(pdf) and int(secs[j]) == sec:
-                    hist.append((sec, float(vals[j])))
-                    j += 1
-                lo = sec - window_seconds
-                window = [_dec2(v) for (s, v) in hist if lo <= s <= sec]
-                for k in range(i, j):
-                    scores[k], flags[k] = _score_one(float(vals[k]), window)
-                i = j
-            out = pdf[["event_id", "user_id", "ts", "value"]].copy()
-            out["score"] = scores
-            out["is_anomaly"] = flags
-            yield out
-
+    def step(key, pdf, ts_us, carry):
+        hist = list(zip(*carry))
+        secs = [t // 1_000_000 for t in ts_us]
+        vals = pdf["value"].tolist()
+        scores = [0.0] * len(pdf)
+        flags = [0] * len(pdf)
+        # group by distinct second: admit ALL rows of a second into
+        # history before scoring any of them — this is what makes the
+        # causal evaluation match the batch RANGE frame's tie handling
+        i = 0
+        while i < len(pdf):
+            j = i
+            sec = secs[i]
+            while j < len(pdf) and secs[j] == sec:
+                hist.append((sec, float(vals[j])))
+                j += 1
+            lo = sec - window_seconds
+            window = [_dec2(v) for (s, v) in hist if lo <= s <= sec]
+            for k in range(i, j):
+                scores[k], flags[k] = _score_one(float(vals[k]), window)
+            i = j
+        out = pdf[["event_id", "user_id", "ts", "value"]].copy()
+        out["score"] = scores
+        out["is_anomaly"] = flags
         if hist:
             hist.sort(key=lambda e: e[0])
             hi = hist[-1][0]
             hist = [e for e in hist if e[0] >= hi - window_seconds]
             if history_size is not None and len(hist) > history_size:
                 hist = hist[-history_size:]
-            state.update((
-                [int(s) for s, _ in hist],
-                [float(v) for _, v in hist],
-            ))
+        carry = ([int(s) for s, _ in hist], [float(v) for _, v in hist])
+        return carry, out
 
-    return fn
+    return fold(step, ([], []), order=("ts", "event_id"), ts_col="ts")
 
 
 def spike_dip_stream(
@@ -193,10 +179,10 @@ def spike_dip_stream(
     `key_col` shuffles once to the state partitioning, which then also
     serves the sink writes.
     """
-    return events.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        events,
+        key_col,
         make_spike_dip_fn(window_seconds, history_size),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        OUTPUT_SCHEMA,
+        STATE_SCHEMA,
     )

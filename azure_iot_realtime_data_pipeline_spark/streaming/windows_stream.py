@@ -1,40 +1,53 @@
-"""Streaming bindings for the K-family event-time operators (K1-K4, K7).
+"""Streaming twins of the batch operators.
 
-The batch forms live in operators/sessions.py (sessionize, tumbling,
-hopping — oracle-checked as q_sessionize / q_tumbling_agg /
-q_hopping_agg). These are their Structured-Streaming twins over the
-watermarked events stream, mirroring how the F2 anomaly operator ships
-both forms (operators/windows.py <-> streaming/anomaly.py):
+Two kinds of twin live here:
 
-- tumbling/hopping: ``F.window(ts, size[, slide])`` — bit-equivalent to
-  the batch arithmetic form (both are epoch-aligned buckets, and the sum
-  runs as exact decimal before the double cast), asserted by the
-  batch-equivalence tests in tests/test_streaming_windows.py.
-- session: ``F.session_window(ts, gap)``. Boundary semantics, documented:
-  ``sessionize`` starts a new session when the inter-event gap is
-  STRICTLY greater than ``gap_seconds`` (ANSI-SQL expressible, the
-  oracle-checked form); ``F.session_window`` closes a session when the
-  next event is >= session_end = last_ts + gap — an event landing at
-  exactly ``gap`` seconds stays in-session under the batch operator but
-  opens a new one here. Equivalence tests therefore compare the
-  streaming form against the BATCH ``F.session_window`` aggregation
-  (same engine semantics), not against ``sessionize``.
+- Engine-native twins: tumbling/hopping (``F.window``), session
+  (``F.session_window``), dedup (``dropDuplicatesWithinWatermark``), the
+  interval join, OHLC, the latest value, enrichment and the CMS sketch.
+  Spark keeps their state; each is the batch operator's aggregate or
+  join bound to the watermarked stream.
+- Fold twins (as-of, gaps, the event-time clamp, the sketches, TWA,
+  rate, EWMA, Holt, availability, trending, heavy hitters, transitions,
+  CUSUM, alarms, state durations, trapezoid, throttle, funnel): each is
+  a fold over the per-key state kernel in `streaming/carry.py`. The
+  fold keeps only its carry, its arithmetic and the rows it emits; the
+  kernel reads and writes the state, concatenates the key's Arrow
+  chunks, drops NULL-event-time rows and sorts the micro-batch in the
+  order the fold declares, converts the event time to microseconds and
+  makes the ``applyInPandasWithState`` call.
 
-Scale notes: all three are ordinary streaming hash aggregations — state
-is one row per open (key, window), pruned by the watermark; the hopping
-fan-out multiplies rows map-side by size/slide before the shuffle,
-identical to the batch plan. In production `append` output mode plus
-``withWatermark`` bounds state; the equivalence tests run `complete`
-mode on a finite replay so every window emits.
+Every fold twin runs under ``NoTimeout`` (carry.py): a key's fold runs
+only when the key has rows in the micro-batch. So an idle key's carry
+is kept forever, the watermark-buffered folds emit a quiet key's
+buffered rows only when that key sees another row, and a row later than
+the watermark still reaches the fold (no late-row filter runs).
+
+Session boundary semantics, documented: ``sessionize`` starts a new
+session when the inter-event gap is STRICTLY greater than
+``gap_seconds`` (the oracle-checked form); ``F.session_window`` closes a
+session when the next event is >= last_ts + gap, so an event exactly
+``gap`` seconds later opens a new session here. The equivalence tests
+compare the streaming form against the batch ``session_stream(...,
+watermark=None)`` aggregation (same engine semantics), not against
+``sessionize``.
+
+Scale notes: the window twins are ordinary streaming hash aggregations
+— state is one row per open (key, window), pruned by the watermark, and
+the hopping fan-out multiplies rows map-side by size/slide before the
+shuffle, as in the batch plan. In production `append` mode plus
+``withWatermark`` bounds their state; the equivalence tests run
+`complete` mode on a finite replay so every window emits.
 """
 
 from __future__ import annotations
+
+import math
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -46,23 +59,13 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from azure_iot_realtime_data_pipeline_spark.streaming.carry import (
+    fold,
+    fold_stream,
+    round4,
+)
+
 DEFAULT_WATERMARK = "60 seconds"
-
-
-def one_frame(pdfs):
-    """Concatenate a key's Arrow chunks into ONE frame (or None when
-    empty). Every order-sensitive carry fn must sort the WHOLE
-    micro-batch before folding: `applyInPandasWithState` delivers a
-    key's batch as MULTIPLE chunks once it exceeds
-    `spark.sql.execution.arrow.maxRecordsPerBatch` (default 10k), and
-    chunk-local sorting would silently permute the series across chunk
-    boundaries — corrupting any order-dependent statistic (CUSUM, EWMA,
-    rates, carries). Order-insensitive sketches (KMV, binned counts,
-    Misra-Gries guarantees) may still stream chunk-by-chunk."""
-    frames = [p for p in pdfs if len(p)]
-    if not frames:
-        return None
-    return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
 
 
 def _sum_value_dec(col: str = "value"):
@@ -215,38 +218,33 @@ ASOF_STATE_SCHEMA = StructType([StructField("last_val", DoubleType())])
 
 
 def make_asof_fn():
-    """applyInPandasWithState body for the K4 streaming twin (picklable
-    closure). Per key: rows of each micro-batch are processed in
-    (ts, side, event_id) order — builds before probes at equal
-    timestamps, so an exact-tie build is visible (>= semantics), and
-    among equal-ts builds the highest event_id lands last and wins,
-    which IS the batch form's per-(key, ts) max-event_id dedup rule.
-    The carry survives micro-batch boundaries in the state cell."""
+    """Fold for the K4 streaming twin. Per key: rows of each micro-batch
+    are processed in (ts, side, event_id) order — builds before probes
+    at equal timestamps, so an exact-tie build is visible (>=
+    semantics), and among equal-ts builds the highest event_id lands
+    last and wins, which IS the batch form's per-(key, ts) max-event_id
+    dedup rule. The carry survives micro-batch boundaries in the state
+    cell."""
 
-    def fn(key, pdfs, state):
-        last_val = state.get[0] if state.exists else None
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf.sort_values(["ts", "_side", "event_id"], kind="stable")
-            carried = []
-            for side, v in zip(pdf["_side"], pdf["value"]):
-                if side == 0:
-                    if not pd.isna(v):
-                        # batch asof_join carries last(value,
-                        # ignorenulls=True): a NULL-valued build must
-                        # not reset the carry to NaN (review r7)
-                        last_val = float(v)
-                else:
-                    carried.append(last_val)
-            out = pdf[pdf["_side"] == 1][["event_id", "user_id", "ts"]].copy()
-            out["asof_purchase_value"] = pd.Series(
-                carried, index=out.index, dtype="float64"
-            )
-            yield out
-        if last_val is not None:
-            state.update((float(last_val),))
+    def step(key, pdf, ts_us, carry):
+        (last_val,) = carry
+        carried = []
+        for side, v in zip(pdf["_side"], pdf["value"]):
+            if side == 0:
+                if not pd.isna(v):
+                    # batch asof_join carries last(value,
+                    # ignorenulls=True): a NULL-valued build must not
+                    # reset the carry to NaN
+                    last_val = float(v)
+            else:
+                carried.append(last_val)
+        out = pdf[pdf["_side"] == 1][["event_id", "user_id", "ts"]].copy()
+        out["asof_purchase_value"] = pd.Series(
+            carried, index=out.index, dtype="float64"
+        )
+        return (last_val,), out
 
-    return fn
+    return fold(step, (None,), order=("ts", "_side", "event_id"), ts_col="ts")
 
 
 def asof_stream(
@@ -286,12 +284,12 @@ def asof_stream(
     )
     if watermark is not None:
         tagged = tagged.withWatermark(ts_col, watermark)
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_asof_fn(),
-        outputStructType=ASOF_OUTPUT_SCHEMA,
-        stateStructType=ASOF_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        ASOF_OUTPUT_SCHEMA,
+        ASOF_STATE_SCHEMA,
     )
 
 
@@ -308,7 +306,7 @@ ASOF_WM_STATE_SCHEMA = StructType(
 
 
 def make_asof_wm_fn():
-    """applyInPandasWithState body for the WATERMARK-BUFFERED K4 twin.
+    """Fold for the WATERMARK-BUFFERED K4 twin.
 
     Per key, every arriving row (both sides) is buffered in state; only
     rows whose event time has been passed by the CURRENT event-time
@@ -321,25 +319,14 @@ def make_asof_wm_fn():
     State bound: watermark-delay x per-key arrival rate rows — the same
     bound a native stream-stream interval join carries."""
 
-    def fn(key, pdfs, state):
-        if state.exists:
-            last_val, b_ts, b_side, b_id, b_val = state.get
-            buf = [
-                (int(t), int(s), int(i), v)
-                for t, s, i, v in zip(b_ts, b_side, b_id, b_val)
-            ]
-        else:
-            last_val, buf = None, []
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            ts_us = pdf["ts"].values.astype("datetime64[us]").astype("int64")
-            for t, s, eid, v in zip(
-                ts_us, pdf["_side"], pdf["event_id"], pdf["value"]
-            ):
-                buf.append(
-                    (int(t), int(s), int(eid), None if pd.isna(v) else float(v))
-                )
-        wm_us = state.getCurrentWatermarkMs() * 1000
+    def step(key, pdf, ts_us, carry, wm_us):
+        last_val, b_ts, b_side, b_id, b_val = carry
+        buf = [
+            (int(t), int(s), int(i), v)
+            for t, s, i, v in zip(b_ts, b_side, b_id, b_val)
+        ]
+        for t, s, eid, v in zip(ts_us, pdf["_side"], pdf["event_id"], pdf["value"]):
+            buf.append((t, int(s), int(eid), None if pd.isna(v) else float(v)))
         # unique event_ids make the (ts, side, id) prefix decisive, so the
         # possibly-None value never participates in the sort
         buf.sort()
@@ -360,28 +347,26 @@ def make_asof_wm_fn():
                     last_val = v
             else:
                 out.append((eid, int(key[0]), t, last_val))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "event_id": pd.Series([o[0] for o in out], dtype="int64"),
-                    "user_id": pd.Series([o[1] for o in out], dtype="int64"),
-                    "ts": pd.to_datetime([o[2] for o in out], unit="us"),
-                    "asof_purchase_value": pd.Series(
-                        [o[3] for o in out], dtype="float64"
-                    ),
-                }
-            )
-        state.update(
-            (
-                None if last_val is None else float(last_val),
-                [r[0] for r in pend],
-                [r[1] for r in pend],
-                [r[2] for r in pend],
-                [r[3] for r in pend],
-            )
+        frame = pd.DataFrame(
+            {
+                "event_id": pd.Series([o[0] for o in out], dtype="int64"),
+                "user_id": pd.Series([o[1] for o in out], dtype="int64"),
+                "ts": pd.to_datetime([o[2] for o in out], unit="us"),
+                "asof_purchase_value": pd.Series(
+                    [o[3] for o in out], dtype="float64"
+                ),
+            }
         )
+        carry = (last_val, *([r[i] for r in pend] for i in range(4)))
+        return carry, frame
 
-    return fn
+    return fold(
+        step,
+        (None, [], [], [], []),
+        order=("ts", "_side", "event_id"),
+        ts_col="ts",
+        watermarked=True,
+    )
 
 
 def asof_stream_watermarked(
@@ -427,12 +412,12 @@ def asof_stream_watermarked(
             F.col("value"),
         )
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_asof_wm_fn(),
-        outputStructType=ASOF_OUTPUT_SCHEMA,
-        stateStructType=ASOF_WM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        ASOF_OUTPUT_SCHEMA,
+        ASOF_WM_STATE_SCHEMA,
     )
 
 
@@ -441,37 +426,25 @@ GAPS_STATE_SCHEMA = StructType([StructField("last_ts_us", LongType())])
 
 
 def make_gaps_fn(id_col: str = "event_id", key_col: str = "user_id", ts_col: str = "ts"):
-    """applyInPandasWithState body for the L3 streaming twin (picklable
-    closure; column names are parameters so the fn matches whatever
-    `event_gaps_stream` selected — previously they were hardcoded and a
-    non-default key_col/ts_col produced a pandas KeyError at runtime).
-    Per key: each micro-batch is processed in (ts, id) order and every
+    """Fold for the L3 streaming twin (column names are parameters so
+    the fn matches whatever `event_gaps_stream` selected). Per key: each micro-batch is processed in (ts, id) order and every
     row's gap is its ts minus the carried previous ts (NULL for the
     key's first-ever event). Equal-ts ties need no cross-batch tiebreak
     state: their pairwise gap is 0 under ANY order of equal timestamps,
     and the replay source's ts-bucketed staging keeps equal-ts rows in
     one micro-batch."""
 
-    def fn(key, pdfs, state):
-        last_ts = state.get[0] if state.exists else None
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf.sort_values([ts_col, id_col], kind="stable")
-            ts = pdf[ts_col]
-            if getattr(ts.dt, "tz", None) is not None:
-                ts = ts.dt.tz_localize(None)
-            ts_us = ts.astype("datetime64[us]").astype("int64")
-            gaps = []
-            for t in ts_us:
-                gaps.append(None if last_ts is None else int(t) - last_ts)
-                last_ts = int(t)
-            out = pdf[[id_col, key_col, ts_col]].copy()
-            out["gap_us"] = pd.Series(gaps, index=out.index, dtype="Int64")
-            yield out
-        if last_ts is not None:
-            state.update((int(last_ts),))
+    def step(key, pdf, ts_us, carry):
+        (last_ts,) = carry
+        gaps = []
+        for t in ts_us:
+            gaps.append(None if last_ts is None else t - last_ts)
+            last_ts = t
+        out = pdf[[id_col, key_col, ts_col]].copy()
+        out["gap_us"] = pd.Series(gaps, index=out.index, dtype="Int64")
+        return (last_ts,), out
 
-    return fn
+    return fold(step, (None,), order=(ts_col, id_col), ts_col=ts_col)
 
 
 def event_gaps_stream(
@@ -500,12 +473,12 @@ def event_gaps_stream(
     out_schema = StructType(
         [*tagged.schema.fields, StructField("gap_us", LongType())]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_gaps_fn(id_col=id_col, key_col=key_col, ts_col=ts_col),
-        outputStructType=out_schema,
-        stateStructType=GAPS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        GAPS_STATE_SCHEMA,
     )
 
 
@@ -529,22 +502,10 @@ def make_gaps_wm_fn(
     position — which changes BOTH its own gap and its successor's, the
     two rows the in-order twin would have already emitted wrong."""
 
-    def fn(key, pdfs, state):
-        if state.exists:
-            last_ts, b_ts, b_id = state.get
-            buf = [(int(t), int(i)) for t, i in zip(b_ts, b_id)]
-        else:
-            last_ts, buf = None, []
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            ts = pdf[ts_col]
-            if getattr(ts.dt, "tz", None) is not None:
-                ts = ts.dt.tz_localize(None)
-            ts_us = ts.astype("datetime64[us]").astype("int64")
-            buf.extend(
-                (int(t), int(i)) for t, i in zip(ts_us, pdf[id_col])
-            )
-        wm_us = state.getCurrentWatermarkMs() * 1000
+    def step(key, pdf, ts_us, carry, wm_us):
+        last_ts, b_ts, b_id = carry
+        buf = [(int(t), int(i)) for t, i in zip(b_ts, b_id)]
+        buf.extend((t, int(i)) for t, i in zip(ts_us, pdf[id_col]))
         buf.sort()
         pend = [r for r in buf if r[0] >= wm_us]
         out_ids, out_ts, out_gaps = [], [], []
@@ -555,25 +516,23 @@ def make_gaps_wm_fn(
             out_ts.append(t)
             out_gaps.append(None if last_ts is None else t - last_ts)
             last_ts = t
-        if out_ids:
-            frame = pd.DataFrame(
-                {
-                    id_col: pd.Series(out_ids, dtype="int64"),
-                    key_col: pd.Series([key[0]] * len(out_ids), dtype="int64"),
-                    ts_col: pd.to_datetime(out_ts, unit="us"),
-                    "gap_us": pd.Series(out_gaps, dtype="Int64"),
-                }
-            )
-            yield frame
-        state.update(
-            (
-                None if last_ts is None else int(last_ts),
-                [r[0] for r in pend],
-                [r[1] for r in pend],
-            )
+        frame = pd.DataFrame(
+            {
+                id_col: pd.Series(out_ids, dtype="int64"),
+                key_col: pd.Series([key[0]] * len(out_ids), dtype="int64"),
+                ts_col: pd.to_datetime(out_ts, unit="us"),
+                "gap_us": pd.Series(out_gaps, dtype="Int64"),
+            }
         )
+        return (last_ts, [r[0] for r in pend], [r[1] for r in pend]), frame
 
-    return fn
+    return fold(
+        step,
+        (None, [], []),
+        order=(ts_col, id_col),
+        ts_col=ts_col,
+        watermarked=True,
+    )
 
 
 def event_gaps_stream_watermarked(
@@ -602,12 +561,12 @@ def event_gaps_stream_watermarked(
     out_schema = StructType(
         [*tagged.schema.fields, StructField("gap_us", LongType())]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_gaps_wm_fn(id_col=id_col, key_col=key_col, ts_col=ts_col),
-        outputStructType=out_schema,
-        stateStructType=GAPS_WM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        GAPS_WM_STATE_SCHEMA,
     )
 
 
@@ -621,8 +580,8 @@ def make_adjust_clamp_fn(
     ts_col: str = "ts",
     tolerance_us: int | None = None,
 ):
-    """applyInPandasWithState body for the F3 streaming clamp (picklable
-    closure). Per key the state is ONE long — the running event-time
+    """Fold for the F3 streaming clamp.
+    Per key the state is ONE long — the running event-time
     high-watermark in arrival order. Each micro-batch is processed in
     `id_col` (arrival) order; an event at or ahead of the watermark
     passes through and advances it, an out-of-order event's timestamp is
@@ -633,36 +592,21 @@ def make_adjust_clamp_fn(
     the combined Adjust + late-tolerance policy (the reference's actual
     configuration; batch twin `eventtime.eventtime_policy`)."""
 
-    def fn(key, pdfs, state):
-        hwm = state.get[0] if state.exists else None
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf.sort_values(id_col, kind="stable")
-            ts = pdf[ts_col]
-            if getattr(ts.dt, "tz", None) is not None:
-                ts = ts.dt.tz_localize(None)
-            ts_us = ts.astype("datetime64[us]").astype("int64")
-            adj = []
-            keep = []
-            for t in ts_us:
-                t = int(t)
-                hwm = t if hwm is None or t > hwm else hwm
-                keep.append(
-                    tolerance_us is None or t >= hwm - tolerance_us
-                )
-                adj.append(hwm)
-            out = pdf[[id_col, key_col, ts_col]].copy()
-            out["adjusted_ts"] = pd.Series(
-                adj, index=out.index, dtype="int64"
-            ).astype("datetime64[us]")
-            if not all(keep):
-                out = out[pd.Series(keep, index=out.index)]
-            if len(out):
-                yield out
-        if hwm is not None:
-            state.update((int(hwm),))
+    def step(key, pdf, ts_us, carry):
+        (hwm,) = carry
+        adj = []
+        keep = []
+        for t in ts_us:
+            hwm = t if hwm is None or t > hwm else hwm
+            keep.append(tolerance_us is None or t >= hwm - tolerance_us)
+            adj.append(hwm)
+        out = pdf[[id_col, key_col, ts_col]].copy()
+        out["adjusted_ts"] = pd.Series(
+            adj, index=out.index, dtype="int64"
+        ).astype("datetime64[us]")
+        return (hwm,), out.loc[keep]
 
-    return fn
+    return fold(step, (None,), order=(id_col,), ts_col=ts_col)
 
 
 def adjust_clamp_stream(
@@ -694,12 +638,12 @@ def adjust_clamp_stream(
     out_schema = StructType(
         [*tagged.schema.fields, StructField("adjusted_ts", TimestampType())]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_adjust_clamp_fn(id_col=id_col, key_col=key_col, ts_col=ts_col),
-        outputStructType=out_schema,
-        stateStructType=CLAMP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        CLAMP_STATE_SCHEMA,
     )
 
 
@@ -722,17 +666,17 @@ def eventtime_policy_stream(
     out_schema = StructType(
         [*tagged.schema.fields, StructField("adjusted_ts", TimestampType())]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_adjust_clamp_fn(
             id_col=id_col,
             key_col=key_col,
             ts_col=ts_col,
             tolerance_us=tolerance_seconds * 1_000_000,
         ),
-        outputStructType=out_schema,
-        stateStructType=CLAMP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        CLAMP_STATE_SCHEMA,
     )
 
 
@@ -751,40 +695,34 @@ KMV_STATE_SCHEMA = StructType(
 
 
 def make_kmv_fn(k: int = 64):
-    """applyInPandasWithState body for the J30 streaming twin (picklable
-    closure). Per key the state is AT MOST k longs — merge each
+    """Fold for the J30 streaming twin.
+    Per key the state is AT MOST k longs — merge each
     micro-batch's hashes into the kept set, re-take the k smallest
     (KMV sketches merge by exactly this union + re-truncate), and emit
     the running estimate. This is the map-side-combine form the batch
     docstring names as the TypedImperativeAggregate swap point,
     realized in streaming state instead."""
 
-    import math
-
-    def fn(key, pdfs, state):
-        kept = set(state.get[0]) if state.exists else set()
-        for pdf in pdfs:
+    def step(key, chunks, ts_us, carry):
+        kept = set(carry[0])
+        for pdf in chunks:
             kept.update(int(h) for h in pdf["_h"])
         kept = sorted(kept)[:k]
         n_kept = len(kept)
         if n_kept < k:
             est = float(n_kept)
         else:
-            est = (k - 1) * 2.0**32 / kept[-1]
-            # floor-based round_half_up(4), bit-matching the batch
-            # operator's F.floor expression (int() truncates toward
-            # zero and would diverge for negative values)
-            est = math.floor(est * 10000 + 0.5) / 10000
-        state.update((kept,))
-        yield pd.DataFrame(
+            est = round4((k - 1) * 2.0**32 / kept[-1])
+        out = pd.DataFrame(
             {
                 "event_type": [key[0]],
                 "n_kept": [n_kept],
                 "distinct_est": [est],
             }
         )
+        return (kept,), out
 
-    return fn
+    return fold(step, ([],))
 
 
 def kmv_stream(
@@ -811,25 +749,13 @@ def kmv_stream(
         F.col(group_col),
         portable_hash32(F.col(id_col).cast("string")).alias("_h"),
     )
-    return hashed.groupBy(group_col).applyInPandasWithState(
+    return fold_stream(
+        hashed,
+        group_col,
         make_kmv_fn(k),
-        outputStructType=KMV_OUTPUT_SCHEMA,
-        stateStructType=KMV_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        KMV_OUTPUT_SCHEMA,
+        KMV_STATE_SCHEMA,
     )
-
-
-def session_batch_twin(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: int = 3_600,
-) -> DataFrame:
-    """The same F.session_window aggregation on a BATCH frame — the
-    equivalence oracle for session_stream (engine-identical gap
-    semantics; see module docstring on the `>` vs `>=` boundary)."""
-    return session_stream(events, key_col, ts_col, gap_seconds, watermark=None)
 
 
 QSKETCH_OUTPUT_SCHEMA = StructType(
@@ -848,27 +774,25 @@ QSKETCH_STATE_SCHEMA = StructType([StructField("counts", ArrayType(LongType()))]
 def make_qsketch_fn(
     lo: float, width: float, n_bins: int, quantiles: tuple[float, ...]
 ):
-    """applyInPandasWithState body for the L8 streaming twin (picklable
-    closure). Per key the state is EXACTLY n_bins longs — each
+    """Fold for the L8 streaming twin.
+    Per key the state is EXACTLY n_bins longs — each
     micro-batch adds its bucket counts (fixed a-priori range: a stream
     cannot see its min/max up front; out-of-range values clamp to the
     edge buckets, same as the batch fixed_range mode) and emits the
     running quantile estimates with the same upper-bucket-edge
     arithmetic as `analytics.quantile_sketch`."""
-    import math
 
-    def fn(key, pdfs, state):
-        counts = list(state.get[0]) if state.exists else [0] * n_bins
-        for pdf in pdfs:
+    def step(key, chunks, ts_us, carry):
+        counts = list(carry[0])
+        for pdf in chunks:
             vals = pdf["value"].dropna().astype(float)
             for v in vals:
                 b = int((v - lo) // width) if width > 0 else 0
                 b = 0 if b < 0 else (n_bins - 1 if b >= n_bins else b)
                 counts[b] += 1
-        state.update((counts,))
         n = sum(counts)
         if n == 0:
-            return
+            return (counts,), None
         rows = []
         for q in quantiles:
             need = math.ceil(q * n)
@@ -879,17 +803,13 @@ def make_qsketch_fn(
                 if cum >= need:
                     hit = b
                     break
-            est = lo + (hit + 1) * width if width > 0 else lo
-            # floor-based round_half_up(4): int() truncates toward zero,
-            # which diverges from the batch F.floor form when a
-            # fixed_range with negative lo yields a negative estimate
-            est = math.floor(est * 10000 + 0.5) / 10000
+            est = round4(lo + (hit + 1) * width if width > 0 else lo)
             rows.append((key[0], float(q), est, n))
-        yield pd.DataFrame(
+        return (counts,), pd.DataFrame(
             rows, columns=["event_type", "q", "p_est", "n_seen"]
         )
 
-    return fn
+    return fold(step, ([0] * n_bins,))
 
 
 def quantile_sketch_stream(
@@ -913,12 +833,12 @@ def quantile_sketch_stream(
     are monotone merges, late rows land correctly whenever they
     arrive."""
     src = events.select(F.col(group_col), F.col(value_col).alias("value"))
-    return src.groupBy(group_col).applyInPandasWithState(
+    return fold_stream(
+        src,
+        group_col,
         make_qsketch_fn(lo, width, n_bins, quantiles),
-        outputStructType=QSKETCH_OUTPUT_SCHEMA,
-        stateStructType=QSKETCH_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        QSKETCH_OUTPUT_SCHEMA,
+        QSKETCH_STATE_SCHEMA,
     )
 
 
@@ -973,8 +893,8 @@ def make_twa_fn(
     id_col: str = "event_id",
     value_col: str = "value",
 ):
-    """applyInPandasWithState body for the K9 streaming twin (picklable
-    closure). Per key: rows process in (ts, id) order; each interval
+    """Fold for the K9 streaming twin.
+    Per key: rows process in (ts, id) order; each interval
     adds prev_cents * dt to the running weighted sum, exactly the batch
     operator's DECIMAL(18,2) * dt accumulation held as an integer
     (cents * us, bounded by max_cents * span — ~70x inside int64 for
@@ -987,43 +907,25 @@ def make_twa_fn(
     batch — and a key whose measurements are ALL NULL emits a NULL twa
     (n_vals tracks non-null rows), exactly as the batch SUM of all-NULL
     products is NULL."""
-    import math
 
-    def fn(key, pdfs, state):
-        if state.exists:
-            first_ts, prev_ts, prev_cents, wsum, n, n_vals = state.get
-        else:
-            first_ts = prev_ts = prev_cents = None
-            wsum, n, n_vals = 0, 0, 0
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf.sort_values([ts_col, id_col], kind="stable")
-            ts = pdf[ts_col]
-            if getattr(ts.dt, "tz", None) is not None:
-                ts = ts.dt.tz_localize(None)
-            ts_us = ts.astype("datetime64[us]").astype("int64")
-            vals = pdf[value_col]
-            for t, v in zip(ts_us, vals):
-                t = int(t)
-                if prev_ts is not None and prev_cents is not None:
-                    wsum += prev_cents * (t - prev_ts)
-                if first_ts is None:
-                    first_ts = t
-                prev_ts = t
-                if pd.isna(v):
-                    prev_cents = None
-                else:
-                    mag = math.floor(abs(float(v)) * 100.0 + 0.5)
-                    prev_cents = mag if float(v) >= 0 else -mag
-                    n_vals += 1
-                n += 1
+    def step(key, pdf, ts_us, carry):
+        first_ts, prev_ts, prev_cents, wsum, n, n_vals = carry
+        for t, v in zip(ts_us, pdf[value_col]):
+            if prev_ts is not None and prev_cents is not None:
+                wsum += prev_cents * (t - prev_ts)
+            if first_ts is None:
+                first_ts = t
+            prev_ts = t
+            if pd.isna(v):
+                prev_cents = None
+            else:
+                mag = math.floor(abs(float(v)) * 100.0 + 0.5)
+                prev_cents = mag if float(v) >= 0 else -mag
+                n_vals += 1
+            n += 1
         span = (prev_ts - first_ts) if first_ts is not None else 0
-        if span > 0 and n_vals > 0:
-            twa = math.floor((wsum / 100.0) / float(span) * 10000.0 + 0.5) / 10000.0
-        else:
-            twa = None
-        state.update((first_ts, prev_ts, prev_cents, wsum, n, n_vals))
-        yield pd.DataFrame(
+        twa = round4((wsum / 100.0) / float(span)) if span > 0 and n_vals > 0 else None
+        out = pd.DataFrame(
             {
                 key_col: [key[0]],
                 "n_obs": [n],
@@ -1031,8 +933,11 @@ def make_twa_fn(
                 "twa_value": [twa],
             }
         )
+        return (first_ts, prev_ts, prev_cents, wsum, n, n_vals), out
 
-    return fn
+    return fold(
+        step, (None, None, None, 0, 0, 0), order=(ts_col, id_col), ts_col=ts_col
+    )
 
 
 def twa_stream(
@@ -1065,14 +970,14 @@ def twa_stream(
             StructField("twa_value", DoubleType()),
         ]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_twa_fn(
             key_col=key_col, ts_col=ts_col, id_col=id_col, value_col=value_col
         ),
-        outputStructType=out_schema,
-        stateStructType=TWA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        TWA_STATE_SCHEMA,
     )
 
 
@@ -1133,43 +1038,30 @@ def make_rate_fn(
     id_col: str = "event_id", key_col: str = "user_id", ts_col: str = "ts",
     value_col: str = "value",
 ):
-    """applyInPandasWithState body for the K11 streaming twin. Per key:
+    """Fold for the K11 streaming twin. Per key:
     rows process in (ts, id) order; each row's rate is its counter-reset
     delta over the elapsed seconds since the carried previous event —
     the EXACT batch arithmetic (same floor-rounding, same dt>0 gate).
     A missing or non-positive gap yields NULL, as does the key's
     first-ever event."""
-    import math
 
-    def fn(key, pdfs, state):
-        prev_ts, prev_v = state.get if state.exists else (None, None)
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf.sort_values([ts_col, id_col], kind="stable")
-            ts = pdf[ts_col]
-            if getattr(ts.dt, "tz", None) is not None:
-                ts = ts.dt.tz_localize(None)
-            ts_us = ts.astype("datetime64[us]").astype("int64")
-            rates = []
-            for t, v in zip(ts_us, pdf[value_col]):
-                t = int(t)
-                v = None if pd.isna(v) else float(v)
-                dt_us = None if prev_ts is None else t - prev_ts
-                if dt_us is None or dt_us <= 0 or v is None:
-                    rates.append(None)
-                else:
-                    delta = v - prev_v if (prev_v is not None and v >= prev_v) else v
-                    rates.append(
-                        math.floor(delta / (float(dt_us) / 1_000_000.0) * 10000.0 + 0.5)
-                        / 10000.0
-                    )
-                prev_ts, prev_v = t, v
-            out = pdf[[id_col, key_col, ts_col]].copy()
-            out["rate_per_sec"] = pd.Series(rates, index=out.index, dtype="float64")
-            yield out
-        state.update((prev_ts, prev_v))
+    def step(key, pdf, ts_us, carry):
+        prev_ts, prev_v = carry
+        rates = []
+        for t, v in zip(ts_us, pdf[value_col]):
+            v = None if pd.isna(v) else float(v)
+            dt_us = None if prev_ts is None else t - prev_ts
+            if dt_us is None or dt_us <= 0 or v is None:
+                rates.append(None)
+            else:
+                delta = v - prev_v if (prev_v is not None and v >= prev_v) else v
+                rates.append(round4(delta / (float(dt_us) / 1_000_000.0)))
+            prev_ts, prev_v = t, v
+        out = pdf[[id_col, key_col, ts_col]].copy()
+        out["rate_per_sec"] = pd.Series(rates, index=out.index, dtype="float64")
+        return (prev_ts, prev_v), out
 
-    return fn
+    return fold(step, (None, None), order=(ts_col, id_col), ts_col=ts_col)
 
 
 def rate_of_change_stream(
@@ -1195,12 +1087,12 @@ def rate_of_change_stream(
             StructField("rate_per_sec", DoubleType()),
         ]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_rate_fn(id_col=id_col, key_col=key_col, ts_col=ts_col, value_col=value_col),
-        outputStructType=out_schema,
-        stateStructType=RATE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        RATE_STATE_SCHEMA,
     )
 
 
@@ -1244,8 +1136,8 @@ def make_ewma_fn(
     value_col: str = "value",
     alpha: float = 0.3,
 ):
-    """applyInPandasWithState body for the K13 streaming twin (picklable
-    closure). Per key: rows process in (ts, id) order; each non-NULL
+    """Fold for the K13 streaming twin.
+    Per key: rows process in (ts, id) order; each non-NULL
     measurement advances level = alpha*v + (1-alpha)*level (seeded by
     the first value) — the IDENTICAL IEEE double ops, in the identical
     order, as the batch fold in `sessions.ewma_per_key`, so the running
@@ -1256,33 +1148,25 @@ def make_ewma_fn(
     Emission rounds half-up to 4dp exactly like the batch output; the
     carried level stays UNROUNDED (rounding inside the recurrence would
     compound)."""
-    import math
-
     a = float(alpha)
     b = 1.0 - float(alpha)
 
-    def fn(key, pdfs, state):
-        n, level = state.get if state.exists else (0, None)
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf.sort_values([ts_col, id_col], kind="stable")
-            for v in pdf[value_col]:
-                if pd.isna(v):
-                    continue
-                v = float(v)
-                level = v if level is None else a * v + b * level
-                n += 1
-        state.update((n, level))
+    def step(key, pdf, ts_us, carry):
+        n, level = carry
+        for v in pdf[value_col]:
+            if pd.isna(v):
+                continue
+            v = float(v)
+            level = v if level is None else a * v + b * level
+            n += 1
+        out = None
         if n > 0:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "n_events": [n],
-                    "ewma": [math.floor(level * 10000.0 + 0.5) / 10000.0],
-                }
+            out = pd.DataFrame(
+                {key_col: [key[0]], "n_events": [n], "ewma": [round4(level)]}
             )
+        return (n, level), out
 
-    return fn
+    return fold(step, (0, None), order=(ts_col, id_col), ts_col=ts_col)
 
 
 def ewma_stream(
@@ -1311,7 +1195,9 @@ def ewma_stream(
             StructField("ewma", DoubleType()),
         ]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_ewma_fn(
             key_col=key_col,
             ts_col=ts_col,
@@ -1319,10 +1205,8 @@ def ewma_stream(
             value_col=value_col,
             alpha=alpha,
         ),
-        outputStructType=out_schema,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        EWMA_STATE_SCHEMA,
     )
 
 
@@ -1343,8 +1227,8 @@ def make_holt_fn(
     alpha: float = 0.3,
     gamma: float = 0.2,
 ):
-    """applyInPandasWithState body for the K18 streaming twin (picklable
-    closure). Per key: rows process in (ts, id) order; each non-NULL
+    """Fold for the K18 streaming twin.
+    Per key: rows process in (ts, id) order; each non-NULL
     measurement advances the Holt pair
 
         l' = a*v + (1-a)*(l+b);  b' = g*(l' - l) + (1-g)*b
@@ -1355,45 +1239,38 @@ def make_holt_fn(
     struct fold bit-for-bit over any processed prefix. NULL/NaN skipped
     (same Arrow indistinguishability contract as K13). Emission rounds
     4dp; the carried pair stays UNROUNDED."""
-    import math
-
     a = float(alpha)
     oa = 1.0 - float(alpha)
     gm = float(gamma)
     og = 1.0 - float(gamma)
 
-    def fn(key, pdfs, state):
-        n, level, trend = state.get if state.exists else (0, None, 0.0)
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf.sort_values([ts_col, id_col], kind="stable")
-            for v in pdf[value_col]:
-                if pd.isna(v):
-                    continue
-                v = float(v)
-                if level is None:
-                    level, trend = v, 0.0
-                else:
-                    nl = a * v + oa * (level + trend)
-                    nb = gm * ((a * v + oa * (level + trend)) - level) + (
-                        og * trend
-                    )
-                    level, trend = nl, nb
-                n += 1
-        state.update((n, level, trend))
+    def step(key, pdf, ts_us, carry):
+        n, level, trend = carry
+        for v in pdf[value_col]:
+            if pd.isna(v):
+                continue
+            v = float(v)
+            if level is None:
+                level, trend = v, 0.0
+            else:
+                nl = a * v + oa * (level + trend)
+                nb = gm * ((a * v + oa * (level + trend)) - level) + (og * trend)
+                level, trend = nl, nb
+            n += 1
+        out = None
         if n > 0:
-            r4 = lambda x: math.floor(x * 10000.0 + 0.5) / 10000.0
-            yield pd.DataFrame(
+            out = pd.DataFrame(
                 {
                     key_col: [key[0]],
                     "n_events": [n],
-                    "level": [r4(level)],
-                    "trend": [r4(trend)],
-                    "forecast": [r4(level + trend)],
+                    "level": [round4(level)],
+                    "trend": [round4(trend)],
+                    "forecast": [round4(level + trend)],
                 }
             )
+        return (n, level, trend), out
 
-    return fn
+    return fold(step, (0, None, 0.0), order=(ts_col, id_col), ts_col=ts_col)
 
 
 def holt_stream(
@@ -1426,7 +1303,9 @@ def holt_stream(
             StructField("forecast", DoubleType()),
         ]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_holt_fn(
             key_col=key_col,
             ts_col=ts_col,
@@ -1435,10 +1314,8 @@ def holt_stream(
             alpha=alpha,
             gamma=gamma,
         ),
-        outputStructType=out_schema,
-        stateStructType=HOLT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        HOLT_STATE_SCHEMA,
     )
 
 
@@ -1458,51 +1335,35 @@ def make_availability_fn(
     id_col: str = "event_id",
     offline_gap_seconds: int = 21600,
 ):
-    """applyInPandasWithState body for the K21 streaming twin (picklable
-    closure). Per key the carry cell is FOUR longs — (count, first
+    """Fold for the K21 streaming twin.
+    Per key the carry cell is FOUR longs — (count, first
     epoch, last epoch, accumulated downtime): each row in (ts, id)
     order extends last; a gap above the threshold adds WHOLE to
     downtime, matching the batch contract exactly (same integer
     microsecond arithmetic). Emission recomputes span/availability from
     the cell, rounded exactly like the batch operator."""
-    import math
-
     thresh = int(offline_gap_seconds) * 1_000_000
 
-    def fn(key, pdfs, state):
-        n, first, last, down = (
-            state.get if state.exists else (0, None, None, 0)
-        )
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            # NaT guard BEFORE the int64 cast: a NULL ts would become
-            # INT64 min and poison first/last/downtime; the batch form
-            # drops NULL timestamps, so the twin must skip them too
-            pdf = pdf[pdf[ts_col].notna()]
-            pdf = pdf.sort_values([ts_col, id_col], kind="stable")
-            ts = pdf[ts_col]
-            if getattr(ts.dt, "tz", None) is not None:
-                ts = ts.dt.tz_localize(None)
-            for t in ts.astype("datetime64[us]").astype("int64"):
-                t = int(t)
-                if first is None:
-                    first = t
-                else:
-                    gap = t - last
-                    if gap > thresh:
-                        down += gap
-                last = t
-                n += 1
-        state.update((n, first, last, down))
+    def step(key, pdf, ts_us, carry):
+        n, first, last, down = carry
+        for t in ts_us:
+            if first is None:
+                first = t
+            else:
+                gap = t - last
+                if gap > thresh:
+                    down += gap
+            last = t
+            n += 1
+        out = None
         if n > 0:
             span = last - first
-            r4 = lambda x: math.floor(x * 10000.0 + 0.5) / 10000.0
-            yield pd.DataFrame(
+            out = pd.DataFrame(
                 {
                     key_col: [key[0]],
                     "n_events": [n],
-                    "span_seconds": [r4(span / 1e6)],
-                    "downtime_seconds": [r4(down / 1e6)],
+                    "span_seconds": [round4(span / 1e6)],
+                    "downtime_seconds": [round4(down / 1e6)],
                     "availability": [
                         math.floor((1.0 - down / span) * 1000000.0 + 0.5)
                         / 1000000.0
@@ -1511,8 +1372,9 @@ def make_availability_fn(
                     ],
                 }
             )
+        return (n, first, last, down), out
 
-    return fn
+    return fold(step, (0, None, None, 0), order=(ts_col, id_col), ts_col=ts_col)
 
 
 def availability_stream(
@@ -1539,17 +1401,17 @@ def availability_stream(
             StructField("availability", DoubleType()),
         ]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_availability_fn(
             key_col=key_col,
             ts_col=ts_col,
             id_col=id_col,
             offline_gap_seconds=offline_gap_seconds,
         ),
-        outputStructType=out_schema,
-        stateStructType=AVAIL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        AVAIL_STATE_SCHEMA,
     )
 
 
@@ -1567,8 +1429,8 @@ def make_trending_fn(
     ts_col: str = "ts",
     bucket_seconds: int = 3600,
 ):
-    """applyInPandasWithState body for the L30 streaming twin (picklable
-    closure). Per type the carry is THREE longs — (current bucket id,
+    """Fold for the L30 streaming twin.
+    Per type the carry is THREE longs — (current bucket id,
     its running count, the LAST CLOSED bucket's count): a row landing
     in a LATER bucket closes the current one, emitting (bucket_start,
     n, prev_n, growth) with the gap-aware lag semantics of the batch
@@ -1576,55 +1438,35 @@ def make_trending_fn(
     buckets don't reset it). The open bucket is never emitted — the
     batch-equivalence test excludes each type's final bucket. NULL
     timestamps are skipped (no bucket)."""
-    import math
-
     b_us = int(bucket_seconds) * 1_000_000
 
-    def fn(key, pdfs, state):
-        cur_b, cur_n, prev_n = (
-            state.get if state.exists else (None, 0, None)
-        )
+    def step(key, pdf, ts_us, carry):
+        cur_b, cur_n, prev_n = carry
         rows = []
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf[pdf[ts_col].notna()]
-            pdf = pdf.sort_values([ts_col], kind="stable")
-            ts = pdf[ts_col]
-            if getattr(ts.dt, "tz", None) is not None:
-                ts = ts.dt.tz_localize(None)
-            for t in ts.astype("datetime64[us]").astype("int64"):
-                b = (int(t) // b_us) * b_us
-                if cur_b is not None and b < cur_b:
-                    # late arrival for an already-advanced bucket: DROP
-                    # (watermark semantics — an emitted bucket cannot be
-                    # amended in append mode; counting it into the open
-                    # bucket would silently shift growth). The
-                    # batch-equivalence contract therefore assumes
-                    # in-order replay, like every carry twin here.
-                    continue
-                if cur_b is None:
-                    cur_b, cur_n = b, 0
-                elif b > cur_b:
-                    growth = (
-                        None
-                        if prev_n is None
-                        else math.floor(cur_n / prev_n * 10000.0 + 0.5)
-                        / 10000.0
-                    )
-                    rows.append((key[0], cur_b, cur_n, prev_n, growth))
-                    prev_n = cur_n
-                    cur_b, cur_n = b, 0
-                cur_n += 1
-        state.update((cur_b, cur_n, prev_n))
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    type_col, "_bucket_us", "n", "prev_n", "growth"
-                ],
-            )
+        for t in ts_us:
+            b = (t // b_us) * b_us
+            if cur_b is not None and b < cur_b:
+                # late arrival for an already-advanced bucket: DROP
+                # (watermark semantics — an emitted bucket cannot be
+                # amended in append mode; counting it into the open
+                # bucket would silently shift growth). The
+                # batch-equivalence contract therefore assumes
+                # in-order replay, like every carry twin here.
+                continue
+            if cur_b is None:
+                cur_b, cur_n = b, 0
+            elif b > cur_b:
+                growth = None if prev_n is None else round4(cur_n / prev_n)
+                rows.append((key[0], cur_b, cur_n, prev_n, growth))
+                prev_n = cur_n
+                cur_b, cur_n = b, 0
+            cur_n += 1
+        out = pd.DataFrame(
+            rows, columns=[type_col, "_bucket_us", "n", "prev_n", "growth"]
+        )
+        return (cur_b, cur_n, prev_n), out
 
-    return fn
+    return fold(step, (None, 0, None), order=(ts_col,), ts_col=ts_col)
 
 
 def trending_stream(
@@ -1649,14 +1491,14 @@ def trending_stream(
             StructField("growth", DoubleType()),
         ]
     )
-    out = tagged.groupBy(type_col).applyInPandasWithState(
+    out = fold_stream(
+        tagged,
+        type_col,
         make_trending_fn(
             type_col=type_col, ts_col=ts_col, bucket_seconds=bucket_seconds
         ),
-        outputStructType=out_schema,
-        stateStructType=TRENDING_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        TRENDING_STATE_SCHEMA,
     )
     return out.select(
         F.col(type_col).alias("type"),
@@ -1677,8 +1519,8 @@ MG_STATE_SCHEMA = StructType(
 
 
 def make_mg_fn(k: int = 8):
-    """applyInPandasWithState body for the Misra-Gries heavy-hitter
-    sketch (picklable closure). Per group the state is AT MOST k
+    """Fold for the Misra-Gries heavy-hitter
+    sketch. Per group the state is AT MOST k
     (item, counter) pairs plus the processed-row count: increment a
     tracked item, adopt the item into a free slot, or — the MG step —
     decrement EVERY counter when a new item arrives with all k slots
@@ -1690,14 +1532,11 @@ def make_mg_fn(k: int = 8):
     bounded-state streaming member of the sketch family beside KMV
     (distinct) and the binned quantile sketch."""
 
-    def fn(key, pdfs, state):
-        if state.exists:
-            items, counts, n_seen = state.get
-            counters = dict(zip(items, (int(c) for c in counts)))
-            n_seen = int(n_seen)
-        else:
-            counters, n_seen = {}, 0
-        for pdf in pdfs:
+    def step(key, chunks, ts_us, carry):
+        items, counts, n_seen = carry
+        counters = dict(zip(items, (int(c) for c in counts)))
+        n_seen = int(n_seen)
+        for pdf in chunks:
             for it in pdf["_item"]:
                 if pd.isna(it):
                     # NULL items are ignored entirely (not counted in
@@ -1718,19 +1557,18 @@ def make_mg_fn(k: int = 8):
                         counters[t] -= 1
                         if counters[t] == 0:
                             del counters[t]
-        state.update((list(counters), [counters[t] for t in counters], n_seen))
-        if counters:
-            its = sorted(counters)
-            yield pd.DataFrame(
-                {
-                    "group": [key[0]] * len(its),
-                    "item": its,
-                    "count_lb": [counters[t] for t in its],
-                    "n_seen": [n_seen] * len(its),
-                }
-            )
+        its = sorted(counters)
+        out = pd.DataFrame(
+            {
+                "group": [key[0]] * len(its),
+                "item": its,
+                "count_lb": [counters[t] for t in its],
+                "n_seen": [n_seen] * len(its),
+            }
+        )
+        return (list(counters), [counters[t] for t in counters], n_seen), out
 
-    return fn
+    return fold(step, ([], [], 0))
 
 
 def heavy_hitters_stream(
@@ -1758,12 +1596,12 @@ def heavy_hitters_stream(
             StructField("n_seen", LongType()),
         ]
     )
-    return tagged.groupBy("_g").applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        "_g",
         make_mg_fn(k=k),
-        outputStructType=out_schema,
-        stateStructType=MG_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        MG_STATE_SCHEMA,
     )
 
 
@@ -1781,8 +1619,8 @@ def make_transition_fn(
     id_col: str = "event_id",
     type_col: str = "event_type",
 ):
-    """applyInPandasWithState body for the L20 streaming twin (picklable
-    closure). Per key: rows process in (ts, id) order; each event past
+    """Fold for the L20 streaming twin.
+    Per key: rows process in (ts, id) order; each event past
     the key's first yields one (from_type, to_type) pair instance, but
     only pairs whose SUCCESSOR type is non-NULL are emitted — exactly
     the batch lead window's multiset (lead emits the pair at the
@@ -1792,29 +1630,25 @@ def make_transition_fn(
     (has_prev, prev_type) — prev_type alone can't distinguish 'no prior
     event' from 'prior event of NULL type'."""
 
-    def fn(key, pdfs, state):
-        has_prev, prev_type = state.get if state.exists else (False, None)
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf.sort_values([ts_col, id_col], kind="stable")
-            froms, tos = [], []
-            for ty in pdf[type_col]:
-                cur = None if pd.isna(ty) else str(ty)
-                if has_prev and cur is not None:
-                    froms.append(prev_type)
-                    tos.append(cur)
-                has_prev, prev_type = True, cur
-            if froms:
-                yield pd.DataFrame(
-                    {
-                        key_col: [key[0]] * len(froms),
-                        "from_type": pd.Series(froms, dtype="object"),
-                        "to_type": pd.Series(tos, dtype="object"),
-                    }
-                )
-        state.update((has_prev, prev_type))
+    def step(key, pdf, ts_us, carry):
+        has_prev, prev_type = carry
+        froms, tos = [], []
+        for ty in pdf[type_col]:
+            cur = None if pd.isna(ty) else str(ty)
+            if has_prev and cur is not None:
+                froms.append(prev_type)
+                tos.append(cur)
+            has_prev, prev_type = True, cur
+        out = pd.DataFrame(
+            {
+                key_col: [key[0]] * len(froms),
+                "from_type": pd.Series(froms, dtype="object"),
+                "to_type": pd.Series(tos, dtype="object"),
+            }
+        )
+        return (has_prev, prev_type), out
 
-    return fn
+    return fold(step, (False, None), order=(ts_col, id_col), ts_col=ts_col)
 
 
 def transitions_stream(
@@ -1840,14 +1674,14 @@ def transitions_stream(
             StructField("to_type", StringType()),
         ]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_transition_fn(
             key_col=key_col, ts_col=ts_col, id_col=id_col, type_col=type_col
         ),
-        outputStructType=out_schema,
-        stateStructType=TRANSITION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        TRANSITION_STATE_SCHEMA,
     )
 
 
@@ -1870,46 +1704,42 @@ def make_cusum_fn(
     slack: float = 5.0,
     threshold: float = 300.0,
 ):
-    """applyInPandasWithState body for the K15 streaming twin (picklable
-    closure). Per key: rows process in (ts, id) order; the textbook
+    """Fold for the K15 streaming twin.
+    Per key: rows process in (ts, id) order; the textbook
     clamped recurrence runs DIRECTLY on the carried statistic — the
     batch form's prefix-sum identity exists precisely because batch has
     no carry; streaming does, so four longs of state replace the two
     window passes. Deviations are the same exact int64 micro-units, so
     the running statistic bit-matches the batch operator's at every
     prefix. NULL/NaN measurements are skipped like the batch filter."""
-    import math
-
     off_mu = int(round((target + slack) * 1_000_000))
     thr_mu = int(round(threshold * 1_000_000))
 
-    def fn(key, pdfs, state):
-        s_mu, mx_mu, n, n_alarms = state.get if state.exists else (0, 0, 0, 0)
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf.sort_values([ts_col, id_col], kind="stable")
-            for v in pdf[value_col]:
-                if pd.isna(v):
-                    continue
-                d = math.floor(float(v) * 1_000_000 + 0.5) - off_mu
-                s_mu = max(0, s_mu + d)
-                mx_mu = max(mx_mu, s_mu)
-                n += 1
-                if s_mu > thr_mu:
-                    n_alarms += 1
-        state.update((s_mu, mx_mu, n, n_alarms))
+    def step(key, pdf, ts_us, carry):
+        s_mu, mx_mu, n, n_alarms = carry
+        for v in pdf[value_col]:
+            if pd.isna(v):
+                continue
+            d = math.floor(float(v) * 1_000_000 + 0.5) - off_mu
+            s_mu = max(0, s_mu + d)
+            mx_mu = max(mx_mu, s_mu)
+            n += 1
+            if s_mu > thr_mu:
+                n_alarms += 1
+        out = None
         if n > 0:
-            yield pd.DataFrame(
+            out = pd.DataFrame(
                 {
                     key_col: [key[0]],
                     "n": [n],
-                    "final_cusum": [math.floor(s_mu / 1e6 * 10000 + 0.5) / 10000],
-                    "max_cusum": [math.floor(mx_mu / 1e6 * 10000 + 0.5) / 10000],
+                    "final_cusum": [round4(s_mu / 1e6)],
+                    "max_cusum": [round4(mx_mu / 1e6)],
                     "n_alarms": [n_alarms],
                 }
             )
+        return (s_mu, mx_mu, n, n_alarms), out
 
-    return fn
+    return fold(step, (0, 0, 0, 0), order=(ts_col, id_col), ts_col=ts_col)
 
 
 def cusum_stream(
@@ -1940,7 +1770,9 @@ def cusum_stream(
             StructField("n_alarms", LongType()),
         ]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_cusum_fn(
             key_col=key_col,
             ts_col=ts_col,
@@ -1950,10 +1782,8 @@ def cusum_stream(
             slack=slack,
             threshold=threshold,
         ),
-        outputStructType=out_schema,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        CUSUM_STATE_SCHEMA,
     )
 
 
@@ -1976,8 +1806,8 @@ def make_alarm_fn(
     threshold: float = 60.0,
     min_events: int = 3,
 ):
-    """applyInPandasWithState body for the K17 streaming twin (picklable
-    closure). Per key the state is ONE open-run cell (start, last, n,
+    """Fold for the K17 streaming twin.
+    Per key the state is ONE open-run cell (start, last, n,
     peak): an above-threshold event extends or opens the run, an
     at-or-below / NULL / NaN event CLOSES it — emitting the run iff it
     reached `min_events`. Only CLOSED runs emit (a live run may still
@@ -1985,57 +1815,42 @@ def make_alarm_fn(
     replayed stream minus each key's final still-open run — the test
     closes every run with a sentinel below-threshold event to assert
     exact equality."""
-    import math
 
-    def fn(key, pdfs, state):
-        if state.exists:
-            run_open, r_start, r_last, r_n, r_peak = state.get
-        else:
-            run_open, r_start, r_last, r_n, r_peak = False, 0, 0, 0, 0.0
+    def step(key, pdf, ts_us, carry):
+        run_open, r_start, r_last, r_n, r_peak = carry
         outs = []
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            # NaT guard (mirrors make_availability_fn): a NULL ts would
-            # survive astype('int64') as INT64 min, emitting a bogus
-            # negative run and poisoning the carried state.
-            pdf = pdf[pdf[ts_col].notna()]
-            pdf = pdf.sort_values([ts_col, id_col], kind="stable")
-            ts = pdf[ts_col]
-            if getattr(ts.dt, "tz", None) is not None:
-                ts = ts.dt.tz_localize(None)
-            ts_us = ts.astype("datetime64[us]").astype("int64")
-            for t, v in zip(ts_us, pdf[value_col]):
-                t = int(t)
-                above = (not pd.isna(v)) and float(v) > threshold and not math.isnan(float(v))
-                if above:
-                    if run_open:
-                        r_last, r_n = t, r_n + 1
-                        r_peak = max(r_peak, float(v))
-                    else:
-                        run_open, r_start, r_last, r_n, r_peak = (
-                            True, t, t, 1, float(v),
-                        )
-                elif run_open:
-                    if r_n >= min_events:
-                        outs.append((r_start, r_last, r_n, r_peak))
-                    run_open, r_start, r_last, r_n, r_peak = False, 0, 0, 0, 0.0
-        state.update((run_open, r_start, r_last, r_n, r_peak))
-        if outs:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(outs),
-                    "alarm_start": pd.Series(
-                        [o[0] for o in outs], dtype="int64"
-                    ).astype("datetime64[us]"),
-                    "alarm_end": pd.Series(
-                        [o[1] for o in outs], dtype="int64"
-                    ).astype("datetime64[us]"),
-                    "n_events": [o[2] for o in outs],
-                    "peak_value": [o[3] for o in outs],
-                }
-            )
+        for t, v in zip(ts_us, pdf[value_col]):
+            above = (not pd.isna(v)) and float(v) > threshold and not math.isnan(float(v))
+            if above:
+                if run_open:
+                    r_last, r_n = t, r_n + 1
+                    r_peak = max(r_peak, float(v))
+                else:
+                    run_open, r_start, r_last, r_n, r_peak = (
+                        True, t, t, 1, float(v),
+                    )
+            elif run_open:
+                if r_n >= min_events:
+                    outs.append((r_start, r_last, r_n, r_peak))
+                run_open, r_start, r_last, r_n, r_peak = False, 0, 0, 0, 0.0
+        out = pd.DataFrame(
+            {
+                key_col: [key[0]] * len(outs),
+                "alarm_start": pd.Series(
+                    [o[0] for o in outs], dtype="int64"
+                ).astype("datetime64[us]"),
+                "alarm_end": pd.Series(
+                    [o[1] for o in outs], dtype="int64"
+                ).astype("datetime64[us]"),
+                "n_events": [o[2] for o in outs],
+                "peak_value": [o[3] for o in outs],
+            }
+        )
+        return (run_open, r_start, r_last, r_n, r_peak), out
 
-    return fn
+    return fold(
+        step, (False, 0, 0, 0, 0.0), order=(ts_col, id_col), ts_col=ts_col
+    )
 
 
 def sustained_alarms_stream(
@@ -2064,7 +1879,9 @@ def sustained_alarms_stream(
             StructField("peak_value", DoubleType()),
         ]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_alarm_fn(
             key_col=key_col,
             ts_col=ts_col,
@@ -2073,10 +1890,8 @@ def sustained_alarms_stream(
             threshold=threshold,
             min_events=min_events,
         ),
-        outputStructType=out_schema,
-        stateStructType=ALARM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        ALARM_STATE_SCHEMA,
     )
 
 
@@ -2094,49 +1909,32 @@ def make_state_dur_fn(
     id_col: str = "event_id",
     state_col: str = "event_type",
 ):
-    """applyInPandasWithState body for the K16 streaming twin (picklable
-    closure). Per key: each event CLOSES the previous event's state
+    """Fold for the K16 streaming twin.
+    Per key: each event CLOSES the previous event's state
     interval (LOCF — a state holds until the next event) and opens its
     own; the carry is one (ts, state) cell. Emitted closed intervals
     aggregate downstream into the same (key, state) totals as the batch
     operator (its open final state never emits there either)."""
 
-    def fn(key, pdfs, state):
-        if state.exists:
-            prev_ts, prev_state = state.get
-        else:
-            prev_ts = prev_state = None
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            # NaT guard (mirrors make_availability_fn): NULL ts ->
-            # INT64 min under astype('int64') would poison prev_ts for
-            # every later batch; batch twin drops NULL-ts rows too.
-            pdf = pdf[pdf[ts_col].notna()]
-            pdf = pdf.sort_values([ts_col, id_col], kind="stable")
-            ts = pdf[ts_col]
-            if getattr(ts.dt, "tz", None) is not None:
-                ts = ts.dt.tz_localize(None)
-            ts_us = ts.astype("datetime64[us]").astype("int64")
-            states, durs = [], []
-            for t, st in zip(ts_us, pdf[state_col]):
-                t = int(t)
-                if prev_ts is not None:
-                    states.append(prev_state)
-                    durs.append(t - prev_ts)
-                prev_ts = t
-                prev_state = None if pd.isna(st) else str(st)
-            if states:
-                yield pd.DataFrame(
-                    {
-                        key_col: [key[0]] * len(states),
-                        "state": pd.Series(states, dtype="object"),
-                        "dur_us": pd.Series(durs, dtype="int64"),
-                    }
-                )
-        if prev_ts is not None:
-            state.update((prev_ts, prev_state))
+    def step(key, pdf, ts_us, carry):
+        prev_ts, prev_state = carry
+        states, durs = [], []
+        for t, st in zip(ts_us, pdf[state_col]):
+            if prev_ts is not None:
+                states.append(prev_state)
+                durs.append(t - prev_ts)
+            prev_ts = t
+            prev_state = None if pd.isna(st) else str(st)
+        out = pd.DataFrame(
+            {
+                key_col: [key[0]] * len(states),
+                "state": pd.Series(states, dtype="object"),
+                "dur_us": pd.Series(durs, dtype="int64"),
+            }
+        )
+        return (prev_ts, prev_state), out
 
-    return fn
+    return fold(step, (None, None), order=(ts_col, id_col), ts_col=ts_col)
 
 
 def state_durations_stream(
@@ -2160,14 +1958,14 @@ def state_durations_stream(
             StructField("dur_us", LongType()),
         ]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_state_dur_fn(
             key_col=key_col, ts_col=ts_col, id_col=id_col, state_col=state_col
         ),
-        outputStructType=out_schema,
-        stateStructType=STATE_DUR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        STATE_DUR_STATE_SCHEMA,
     )
 
 
@@ -2195,28 +1993,6 @@ def cms_sketch_stream(
     return cms_sketch(items, depth=depth, width=width)
 
 
-def hll_sketch_stream(
-    events: DataFrame,
-    group: str = "event_type",
-    id_col: str = "event_id",
-    p: int = 8,
-) -> DataFrame:
-    """Streaming HyperLogLog register build (J74 twin): the batch
-    `sketches.hll_sketch` runs UNCHANGED on a streaming input — the
-    register table is a MAX-aggregate over a key space bounded at
-    groups x 2^p by construction, and max is order-free and idempotent,
-    so Spark's built-in incremental aggregation state IS the sketch
-    (the same no-custom-state argument as cms_sketch_stream, with max
-    as the merge instead of sum). State: <= groups x 2^p register rows
-    forever, regardless of stream length or id cardinality; run in
-    `complete`/`update` mode, no watermark required. The final register
-    table equals the batch sketch of the full replay bit-for-bit
-    (gated), so `sketches.hll_estimate` over it IS the batch estimate."""
-    from azure_iot_realtime_data_pipeline_spark.operators.sketches import hll_sketch
-
-    return hll_sketch(events, group, id_col, p=p)
-
-
 TRAPEZOID_STATE_SCHEMA = StructType(
     [
         StructField("n_events", LongType()),
@@ -2233,8 +2009,8 @@ def make_trapezoid_fn(
     id_col: str = "event_id",
     value_col: str = "value",
 ):
-    """applyInPandasWithState body for the K19 streaming twin (picklable
-    closure). Per key the carry cell is (n, prev_ep_us, prev_v,
+    """Fold for the K19 streaming twin.
+    Per key the carry cell is (n, prev_ep_us, prev_v,
     cum_micro): each non-NULL measurement adds
     floor((v+prev_v)/2*(ep-prev_ep)+0.5) to the int64 micro
     accumulator — the IDENTICAL one-floor-per-step pin as the batch
@@ -2242,41 +2018,33 @@ def make_trapezoid_fn(
     is exact over any processed prefix with no float drift to carry.
     NULL/NaN measurements skip entirely (they advance neither prev nor
     the sum — the batch form excludes them before the lag). NULL
-    timestamps skip the same way (r7 ADVICE: pd.Timestamp(NaT).value
-    is INT64_MIN, which would poison ep-prev_ep and the carried
-    integral permanently, where the batch form's NULL-_ep rows
-    contribute inc=0 — matching make_throttle_fn's guard)."""
-    import math
+    timestamps never reach the fold (the kernel drops them), where the
+    batch form's NULL-_ep rows contribute inc=0."""
 
-    def fn(key, pdfs, state):
-        n, prev_ep, prev_v, cum = (
-            state.get if state.exists else (0, None, None, 0)
-        )
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf.sort_values([ts_col, id_col], kind="stable")
-            for ts_v, v in zip(pdf[ts_col], pdf[value_col]):
-                if pd.isna(v) or pd.isna(ts_v):
-                    continue
-                v = float(v)
-                ep = int(pd.Timestamp(ts_v).value // 1000)
-                if prev_ep is not None:
-                    cum += int(
-                        math.floor((v + prev_v) / 2.0 * float(ep - prev_ep) + 0.5)
-                    )
-                prev_ep, prev_v = ep, v
-                n += 1
-        state.update((n, prev_ep, prev_v, cum))
+    def step(key, pdf, ts_us, carry):
+        n, prev_ep, prev_v, cum = carry
+        for ep, v in zip(ts_us, pdf[value_col]):
+            if pd.isna(v):
+                continue
+            v = float(v)
+            if prev_ep is not None:
+                cum += int(
+                    math.floor((v + prev_v) / 2.0 * float(ep - prev_ep) + 0.5)
+                )
+            prev_ep, prev_v = ep, v
+            n += 1
+        out = None
         if n > 0:
-            yield pd.DataFrame(
+            out = pd.DataFrame(
                 {
                     key_col: [key[0]],
                     "n_events": [n],
                     "energy": [cum / 1_000_000.0],
                 }
             )
+        return (n, prev_ep, prev_v, cum), out
 
-    return fn
+    return fold(step, (0, None, None, 0), order=(ts_col, id_col), ts_col=ts_col)
 
 
 def trapezoid_stream(
@@ -2304,14 +2072,14 @@ def trapezoid_stream(
             StructField("energy", DoubleType()),
         ]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_trapezoid_fn(
             key_col=key_col, ts_col=ts_col, id_col=id_col, value_col=value_col
         ),
-        outputStructType=out_schema,
-        stateStructType=TRAPEZOID_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        TRAPEZOID_STATE_SCHEMA,
     )
 
 
@@ -2327,8 +2095,8 @@ def make_throttle_fn(
     n_per_window: int = 2,
     window_seconds: int = 86400,
 ):
-    """applyInPandasWithState body for the K24 streaming twin (picklable
-    closure). Per key the carry cell is (current_bucket, count): rows
+    """Fold for the K24 streaming twin.
+    Per key the carry cell is (current_bucket, count): rows
     process in (ts, id) order; a row in a NEWER bucket resets the
     count, a row in the current bucket increments it, and a LATE row
     (older bucket than the carried one) is conservatively DROPPED —
@@ -2337,35 +2105,28 @@ def make_throttle_fn(
     Under in-order arrival (the replay contract shared by the K13/K18
     twins) the kept set equals the batch operator's exactly."""
 
-    def fn(key, pdfs, state):
-        bucket, n = state.get if state.exists else (None, 0)
-        pdf = one_frame(pdfs)
+    def step(key, pdf, ts_us, carry):
+        bucket, n = carry
         kept = []
-        if pdf is not None:
-            pdf = pdf.sort_values([ts_col, id_col], kind="stable")
-            for ts_v, ev_id in zip(pdf[ts_col], pdf[id_col]):
-                if pd.isna(ts_v):
-                    continue
-                ep = int(pd.Timestamp(ts_v).value // 1000)
-                b = ep // (window_seconds * 1_000_000)
-                if bucket is None or b > bucket:
-                    bucket, n = b, 0
-                elif b < bucket:
-                    continue  # late: fail closed
-                if n < n_per_window:
-                    n += 1
-                    kept.append((ev_id, ts_v))
-        state.update((bucket, n))
-        if kept:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(kept),
-                    id_col: [k[0] for k in kept],
-                    ts_col: [k[1] for k in kept],
-                }
-            )
+        for ep, ev_id, ts_v in zip(ts_us, pdf[id_col], pdf[ts_col]):
+            b = ep // (window_seconds * 1_000_000)
+            if bucket is None or b > bucket:
+                bucket, n = b, 0
+            elif b < bucket:
+                continue  # late: fail closed
+            if n < n_per_window:
+                n += 1
+                kept.append((ev_id, ts_v))
+        out = pd.DataFrame(
+            {
+                key_col: [key[0]] * len(kept),
+                id_col: [k[0] for k in kept],
+                ts_col: [k[1] for k in kept],
+            }
+        )
+        return (bucket, n), out
 
-    return fn
+    return fold(step, (None, 0), order=(ts_col, id_col), ts_col=ts_col)
 
 
 def throttle_stream(
@@ -2388,7 +2149,9 @@ def throttle_stream(
             tagged.schema[ts_col],
         ]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_throttle_fn(
             key_col=key_col,
             ts_col=ts_col,
@@ -2396,10 +2159,8 @@ def throttle_stream(
             n_per_window=n_per_window,
             window_seconds=window_seconds,
         ),
-        outputStructType=out_schema,
-        stateStructType=THROTTLE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        THROTTLE_STATE_SCHEMA,
     )
 
 
@@ -2421,8 +2182,8 @@ def make_window_funnel_fn(
     id_col: str = "event_id",
     type_col: str = "event_type",
 ):
-    """applyInPandasWithState body for the L47 streaming twin (picklable
-    closure). Per user the state is the ACTIVE anchor list — each
+    """Fold for the L47 streaming twin.
+    Per user the state is the ACTIVE anchor list — each
     first-stage event opens (anchor_ep, level, last_ep) — plus the
     max level any chain ever reached. Events process in (ts, id) order;
     a stage-k event advances every level-(k-1) anchor with
@@ -2431,56 +2192,41 @@ def make_window_funnel_fn(
     is the earliest one). Anchors are pruned once the event time passes
     their window (no future event can advance them) or once they
     complete — state is bounded by the user's first-stage rate x the
-    window, the interval-twin bound class. NULL timestamps skip (the
-    batch form excludes them via unix_micros going NULL); late rows
+    window, the interval-twin bound class. NULL timestamps never reach
+    the fold (the batch form excludes them via unix_micros going NULL); late rows
     (below an anchor's last_ep) cannot advance it, matching batch
     strict-> semantics under the in-order replay contract shared by
     the K13/K18/K24 twins."""
     n_stages = len(stages)
     w_us = int(window_seconds) * 1_000_000
 
-    def fn(key, pdfs, state):
-        if state.exists:
-            max_level, anchor_eps, levels, last_eps = state.get
-            anchors = list(zip(anchor_eps, levels, last_eps))
-        else:
-            max_level, anchors = 0, []
-        pdf = one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf.sort_values([ts_col, id_col], kind="stable")
-            for ts_v, t in zip(pdf[ts_col], pdf[type_col]):
-                if pd.isna(ts_v):
-                    continue
-                ep = int(pd.Timestamp(ts_v).value // 1000)
-                # expire anchors whose window closed before this event
-                anchors = [a for a in anchors if a[0] + w_us >= ep]
-                if t == stages[0]:
-                    anchors.append((ep, 1, ep))
-                    max_level = max(max_level, 1)
-                for i, (a_ep, lvl, l_ep) in enumerate(anchors):
-                    if (
-                        lvl < n_stages
-                        and t == stages[lvl]
-                        and l_ep < ep <= a_ep + w_us
-                    ):
-                        anchors[i] = (a_ep, lvl + 1, ep)
-                        max_level = max(max_level, lvl + 1)
-                # completed chains carry no further information
-                anchors = [a for a in anchors if a[1] < n_stages]
-        state.update(
-            (
-                max_level,
-                [a[0] for a in anchors],
-                [a[1] for a in anchors],
-                [a[2] for a in anchors],
-            )
-        )
-        yield pd.DataFrame(
+    def step(key, pdf, ts_us, carry):
+        max_level, anchor_eps, levels, last_eps = carry
+        anchors = list(zip(anchor_eps, levels, last_eps))
+        for ep, t in zip(ts_us, pdf[type_col]):
+            # expire anchors whose window closed before this event
+            anchors = [a for a in anchors if a[0] + w_us >= ep]
+            if t == stages[0]:
+                anchors.append((ep, 1, ep))
+                max_level = max(max_level, 1)
+            for i, (a_ep, lvl, l_ep) in enumerate(anchors):
+                if (
+                    lvl < n_stages
+                    and t == stages[lvl]
+                    and l_ep < ep <= a_ep + w_us
+                ):
+                    anchors[i] = (a_ep, lvl + 1, ep)
+                    max_level = max(max_level, lvl + 1)
+            # completed chains carry no further information
+            anchors = [a for a in anchors if a[1] < n_stages]
+        carry = (max_level, *([a[i] for a in anchors] for i in range(3)))
+        out = pd.DataFrame(
             {key_col: [key[0]], "max_level": [max_level],
              "n_active_anchors": [len(anchors)]}
         )
+        return carry, out
 
-    return fn
+    return fold(step, (0, [], [], []), order=(ts_col, id_col), ts_col=ts_col)
 
 
 def window_funnel_stream(
@@ -2507,33 +2253,13 @@ def window_funnel_stream(
             StructField("n_active_anchors", LongType()),
         ]
     )
-    return tagged.groupBy(key_col).applyInPandasWithState(
+    return fold_stream(
+        tagged,
+        key_col,
         make_window_funnel_fn(
             tuple(stages), window_seconds, key_col, ts_col, id_col, type_col
         ),
-        outputStructType=out_schema,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        FUNNEL_STATE_SCHEMA,
+        output_mode="update",
     )
-
-
-def bigram_counts_stream(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """J54/J80 twin: the corpus bigram count table maintained
-    incrementally — the batch `corpus.bigram_counts` runs UNCHANGED on
-    a streaming input because counts are additive (sum is the merge),
-    the same no-custom-state argument as the CMS (sum) and HLL (max)
-    twins. State is the observed-bigram key space: vocabulary-bounded,
-    NOT stream-length-bounded (document corpora converge to a stable
-    vocab; a truly unbounded token domain should maintain the J61 CMS
-    instead — same report, fixed state). The final table equals the
-    batch counts of the full replay bit-for-bit (gated), so J54's
-    conditional probabilities and J80's PMI compute from it offline
-    exactly as from a batch build."""
-    from azure_iot_realtime_data_pipeline_spark.operators.corpus import (
-        bigram_counts,
-    )
-
-    return bigram_counts(docs, text_col, id_col)

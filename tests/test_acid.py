@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -761,8 +762,15 @@ def test_multiprocess_writer_race_soak(spark, tmp_path):
                 )
             continue
         for p, (out, err) in zip(procs, outs):
-            # commit-invariant failure: strict, with full stderr tail
-            assert p.returncode == 0, (out.decode()[-500:], err.decode()[-2000:])
+            # commit-invariant failure: strict, with the stderr's first
+            # exception lines (the tail alone may hold only stack frames)
+            # and its tail
+            err = err.decode()
+            raised = [
+                ln for ln in err.splitlines()
+                if re.search(r"Exception|Error|Caused by:", ln)
+            ][:20]
+            assert p.returncode == 0, (out.decode()[-500:], raised, err[-2000:])
 
     # no lost rows: parent baseline + both workers' appends, with each
     # worker's merge applied — regardless of commit interleaving

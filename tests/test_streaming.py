@@ -135,6 +135,43 @@ def test_streaming_anomaly_state_bounded(spark, replay_dir, tmp_path):
     assert rows  # runs to completion with bounded state
 
 
+def test_spike_dip_fn_scores_alike_however_arrow_chunks_the_batch():
+    """A key's micro-batch split into Arrow chunks out of time order
+    (Spark chunks above arrow.maxRecordsPerBatch) must score exactly
+    like the single chunk: the whole batch is ordered before the fold.
+    A per-chunk sort scored event 3 from an empty history as 0.0."""
+    import pandas as pd
+
+    from azure_iot_realtime_data_pipeline_spark.streaming.anomaly import (
+        make_spike_dip_fn,
+    )
+    from tests.test_streaming_windows import _FakeGroupState
+
+    pdf = pd.DataFrame(
+        {
+            "event_id": [0, 1, 2, 3, 4, 5],
+            "user_id": [7] * 6,
+            "ts": pd.to_datetime("2024-01-01") + pd.to_timedelta(
+                [0, 5, 10, 15, 20, 25], unit="s"
+            ),
+            "value": [10.0, 12.0, 11.0, 14.0, 9.0, 10.5],
+        }
+    )
+    fn = make_spike_dip_fn()
+
+    def scores(chunks):
+        state = _FakeGroupState()
+        out = pd.concat(list(fn((7,), iter(chunks), state)))
+        got = out.set_index("event_id")[["score", "is_anomaly"]].sort_index()
+        return got.to_dict("index"), state.get
+
+    whole, whole_state = scores([pdf])
+    split, split_state = scores([pdf.iloc[3:], pdf.iloc[:3]])
+    assert whole[3]["score"] == 1.3175
+    assert split == whole
+    assert split_state == whole_state
+
+
 def test_multi_sink_fanout(spark, sf_smoke, replay_dir, tmp_path):
     bronze = str(tmp_path / "bronze")
     devices = str(tmp_path / "devices")

@@ -19,13 +19,14 @@ from azure_iot_realtime_data_pipeline_spark.plans.queries import (
     q_tumbling_agg,
 )
 from azure_iot_realtime_data_pipeline_spark.sources.batch import load_table
+from azure_iot_realtime_data_pipeline_spark.streaming import anomaly
+from azure_iot_realtime_data_pipeline_spark.streaming import windows_stream as ws
 from azure_iot_realtime_data_pipeline_spark.streaming.source import (
     replay_events,
     stage_replay_dir,
 )
 from azure_iot_realtime_data_pipeline_spark.streaming.windows_stream import (
     hopping_stream,
-    session_batch_twin,
     session_stream,
     tumbling_stream,
 )
@@ -87,7 +88,7 @@ def test_session_stream_matches_batch_session_window(
         "sessions",
     )
     got = spark.sql("select * from sessions")
-    want = session_batch_twin(load_table(spark, sf_smoke, "events"))
+    want = session_stream(load_table(spark, sf_smoke, "events"), watermark=None)
     cols = ["user_id", "session_start", "session_end_ts", "n_events"]
     assert _as_set(got, cols) == _as_set(want, cols)
     # sanity: sessions actually merged events (not one session per row)
@@ -111,7 +112,7 @@ def test_session_stream_append_mode_with_watermark(spark, replay_dir, tmp_path):
     # the staged replay files are already in Spark's native timestamp
     # domain (written by stage_replay_dir), so a plain read is the batch
     # view of exactly what was streamed
-    final = session_batch_twin(spark.read.parquet(replay_dir))
+    final = session_stream(spark.read.parquet(replay_dir), watermark=None)
     # every appended row must be one of the final sessions
     cols = ["user_id", "session_start", "session_end_ts", "n_events"]
     assert _as_set(emitted, cols) <= _as_set(final, cols)
@@ -545,8 +546,9 @@ def test_kmv_stream_state_survives_restart(spark, sf_smoke, replay_dir, tmp_path
 class _FakeGroupState:
     """Minimal GroupState double for unit-testing stateful closures."""
 
-    def __init__(self):
+    def __init__(self, watermark_ms=None):
         self._v = None
+        self._watermark_ms = watermark_ms
 
     @property
     def exists(self):
@@ -558,6 +560,9 @@ class _FakeGroupState:
 
     def update(self, v):
         self._v = v
+
+    def getCurrentWatermarkMs(self):
+        return self._watermark_ms
 
 
 def test_qsketch_fn_negative_estimate_rounds_half_up_like_batch():
@@ -1328,12 +1333,6 @@ def test_availability_fn_skips_nat_timestamps():
         make_availability_fn,
     )
 
-    class FakeState:
-        exists = False
-
-        def update(self, v):
-            self.value = v
-
     fn = make_availability_fn(offline_gap_seconds=21600)
     pdf = pd.DataFrame(
         {
@@ -1344,7 +1343,7 @@ def test_availability_fn_skips_nat_timestamps():
             "event_id": [1, 2, 3],
         }
     )
-    st = FakeState()
+    st = _FakeGroupState()
     out = list(fn((1,), iter([pdf]), st))
     assert len(out) == 1
     row = out[0].iloc[0]
@@ -1365,12 +1364,6 @@ def test_state_dur_and_alarm_fns_skip_nat_timestamps():
         make_state_dur_fn,
     )
 
-    class FakeState:
-        exists = False
-
-        def update(self, v):
-            self.value = v
-
     pdf = pd.DataFrame(
         {
             "user_id": [1, 1, 1],
@@ -1384,19 +1377,19 @@ def test_state_dur_and_alarm_fns_skip_nat_timestamps():
     )
 
     fn = make_state_dur_fn()
-    st = FakeState()
+    st = _FakeGroupState()
     out = list(fn((1,), iter([pdf.copy()]), st))
     assert len(out) == 1
     r = out[0].iloc[0]
     # exactly ONE closed interval: a -> c (NaT row contributes nothing)
     assert len(out[0]) == 1 and r["state"] == "a" and r["dur_us"] == 3600 * 10**6
-    assert st.value == (pd.Timestamp("2024-01-01 01:00:00").value // 1000, "c")
+    assert st.get == (pd.Timestamp("2024-01-01 01:00:00").value // 1000, "c")
 
     # alarm fn: the NaT row (value 99 > threshold) must NOT extend the
     # run; run closes at the third event with n_events=1 (< min_events
     # without the NaT row, so nothing emits; state carries run closed)
     afn = make_alarm_fn(threshold=60.0, min_events=1)
-    ast = FakeState()
+    ast = _FakeGroupState()
     aout = list(afn((1,), iter([pdf.copy()]), ast))
     assert len(aout) == 1
     arow = aout[0].iloc[0]
@@ -1454,19 +1447,8 @@ def test_trending_fn_drops_late_bucket_arrivals():
         make_trending_fn,
     )
 
-    class FakeState:
-        exists = False
-
-        def update(self, v):
-            self.value = v
-            self.exists = True
-
-        @property
-        def get(self):
-            return self.value
-
     fn = make_trending_fn(bucket_seconds=3600)
-    st = FakeState()
+    st = _FakeGroupState()
     b1 = pd.DataFrame(
         {"event_type": ["x"] * 2,
          "ts": pd.to_datetime(["2024-01-01 10:10", "2024-01-01 11:05"])}
@@ -2481,12 +2463,6 @@ def test_trapezoid_fn_skips_nat_timestamps():
         make_trapezoid_fn,
     )
 
-    class FakeState:
-        exists = False
-
-        def update(self, v):
-            self.value = v
-
     fn = make_trapezoid_fn()
     pdf = pd.DataFrame(
         {
@@ -2498,7 +2474,7 @@ def test_trapezoid_fn_skips_nat_timestamps():
             "value": [2.0, 1000.0, 4.0],
         }
     )
-    st = FakeState()
+    st = _FakeGroupState()
     out = list(fn((1,), iter([pdf]), st))
     assert len(out) == 1
     row = out[0].iloc[0]
@@ -2506,9 +2482,67 @@ def test_trapezoid_fn_skips_nat_timestamps():
     assert row["n_events"] == 2
     assert row["energy"] == 30.0
     # carried state holds the LAST VALID (ep, v), not the NaT poison
-    n, prev_ep, prev_v, cum = st.value
+    n, prev_ep, prev_v, cum = st.get
     assert prev_ep == pd.Timestamp("2024-01-01 00:00:10").value // 1000
     assert prev_v == 4.0 and cum == 30_000_000
+
+
+_TIME_ORDERED_FOLDS = {
+    "asof": ws.make_asof_fn,
+    "asof_wm": ws.make_asof_wm_fn,
+    "gaps": ws.make_gaps_fn,
+    "gaps_wm": ws.make_gaps_wm_fn,
+    "twa": ws.make_twa_fn,
+    "rate": ws.make_rate_fn,
+    "ewma": ws.make_ewma_fn,
+    "holt": ws.make_holt_fn,
+    "availability": ws.make_availability_fn,
+    "trending": ws.make_trending_fn,
+    "transitions": ws.make_transition_fn,
+    "cusum": ws.make_cusum_fn,
+    "alarm": lambda: ws.make_alarm_fn(min_events=1),
+    "state_durations": ws.make_state_dur_fn,
+    "trapezoid": ws.make_trapezoid_fn,
+    "throttle": ws.make_throttle_fn,
+    "funnel": lambda: ws.make_window_funnel_fn(("view", "click"), 3600),
+    "spike_dip": anomaly.make_spike_dip_fn,
+}
+
+
+@pytest.mark.parametrize("fold", list(_TIME_ORDERED_FOLDS))
+def test_time_ordered_folds_skip_nat_timestamps(fold):
+    """Every time-ordered fold skips a NULL-ts row: a NaT row between two
+    valid rows leaves the emitted rows and the carried state exactly as
+    the run without it (no crash, no INT64-min carry, no extra row)."""
+    import pandas as pd
+
+    rows = pd.DataFrame(
+        {
+            "user_id": [1, 1, 1],
+            "event_id": [1, 2, 3],
+            "ts": pd.to_datetime(
+                ["2024-01-01 00:00:00", None, "2024-01-01 00:00:30"]
+            ),
+            "value": [10.0, 1000.0, 70.0],
+            "event_type": ["view", "click", "click"],
+            "_side": [0, 1, 1],
+        }
+    )
+    # every row is final for the watermark-buffered folds
+    wm_ms = int(pd.Timestamp("2024-01-01 01:00:00").value // 1_000_000)
+
+    def run(pdf):
+        state = _FakeGroupState(watermark_ms=wm_ms)
+        out = list(_TIME_ORDERED_FOLDS[fold]()((1,), iter([pdf]), state))
+        frame = pd.concat(out).reset_index(drop=True) if out else None
+        return frame, state.get
+
+    got, got_state = run(rows)
+    want, want_state = run(rows.drop(index=1))
+    assert (got is None) == (want is None)
+    if want is not None:
+        pd.testing.assert_frame_equal(got, want)
+    assert got_state == want_state
 
 
 def test_json_quarantine_runs_on_a_stream(spark, sf_smoke, replay_dir, tmp_path):
@@ -2648,12 +2682,9 @@ def test_hll_sketch_stream_equals_batch_sketch(spark, sf_smoke, replay_dir, tmp_
         hll_estimate,
         hll_sketch,
     )
-    from azure_iot_realtime_data_pipeline_spark.streaming.windows_stream import (
-        hll_sketch_stream,
-    )
 
     q = (
-        hll_sketch_stream(replay_events(spark, replay_dir))
+        hll_sketch(replay_events(spark, replay_dir), "event_type", "event_id")
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("hll_stream")
@@ -2815,9 +2846,6 @@ def test_hll_sketch_stream_state_survives_restart(
         hll_estimate,
         hll_sketch,
     )
-    from azure_iot_realtime_data_pipeline_spark.streaming.windows_stream import (
-        hll_sketch_stream,
-    )
 
     src_buckets = sorted(os.listdir(replay_dir))
     half_dir = str(tmp_path / "replay_half_hll")
@@ -2833,7 +2861,7 @@ def test_hll_sketch_stream_state_survives_restart(
                 latest[(r["event_type"], r["_j"])] = (r["_mj"], r["_p"])
 
         q = (
-            hll_sketch_stream(replay_events(spark, half_dir))
+            hll_sketch(replay_events(spark, half_dir), "event_type", "event_id")
             .writeStream.outputMode("update")
             .foreachBatch(sink)
             .option("checkpointLocation", ckpt)
@@ -2884,9 +2912,6 @@ def test_bigram_counts_stream_equals_batch_counts(spark, sf_smoke, tmp_path):
     from azure_iot_realtime_data_pipeline_spark.operators.corpus import (
         bigram_counts,
     )
-    from azure_iot_realtime_data_pipeline_spark.streaming.windows_stream import (
-        bigram_counts_stream,
-    )
 
     docs = load_table(spark, sf_smoke, "documents")
     staged = str(tmp_path / "docs_stream_bi")
@@ -2898,7 +2923,7 @@ def test_bigram_counts_stream_equals_batch_counts(spark, sf_smoke, tmp_path):
         .parquet(staged)
     )
     q = (
-        bigram_counts_stream(stream)
+        bigram_counts(stream)
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("bigrams_stream")
