@@ -212,7 +212,6 @@ def minhash_lsh_candidates(
     bands: int = 8,
     shingle_k: int = 3,
     est_threshold: float = 0.5,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs via banded MinHash-LSH.
 
@@ -220,58 +219,19 @@ def minhash_lsh_candidates(
     row-slice hashes equal. est_jaccard = fraction of equal signature
     positions. Returns (doc_a, doc_b, est_jaccard >= est_threshold).
 
-    The candidate join is a SELF-join: without materialization each side
-    would re-tokenize, re-shingle and re-hash the full corpus. The
-    signature table (num_hashes longs per doc — tiny next to the text)
-    is therefore written ONCE to `spill_dir` parquet and both join sides
-    read it back. This is the 100 TB pattern verbatim (stage the
-    signature table, join against the staged copy) and — unlike
-    `persist()` — leaks nothing into the session cache. Measured note:
-    a lowest-colliding-band filter (forall over both sigs per joined
-    row) was tried against the post-join `dropDuplicates` and lost ~2x
-    warm at sf0.1 — the candidate set is small after banding, so the
-    dedup shuffle is cheaper than widening the join predicate.
+    One lazy plan: the banded self-join's two sides are the same
+    signature subtree, so Spark computes the signature aggregate once
+    and the second side reads it back as a ReusedExchange (no eager
+    stage job). Band keys are a multi-arg xxhash64 over the raw longs:
+    no string allocation per band, and the hash covers position
+    (argument order). Measured note: a lowest-colliding-band filter
+    (forall over both sigs per joined row) was tried against the
+    post-join `dropDuplicates` and lost ~2x warm at sf0.1 — the
+    candidate set is small after banding, so the dedup shuffle is
+    cheaper than widening the join predicate.
     """
-    rows_per_band = num_hashes // bands
     sig = minhash_signatures(docs, text_col, id_col, num_hashes, shingle_k)
-    sig = stage_to_parquet(sig, "minhash_sig_", spill_dir)
-    # multi-arg xxhash64 over the raw longs: no string allocation per
-    # band, and the hash covers position (argument order) exactly like
-    # the old concat form. Rendered as one SQL string (r13 — py4j
-    # build cost).
-    slices = ", ".join(
-        "struct({band} AS band, xxhash64({vals}) AS bhash)".format(
-            band=i,
-            vals=", ".join(
-                f"element_at(sig, {i * rows_per_band + j + 1})"
-                for j in range(rows_per_band)
-            ),
-        )
-        for i in range(bands)
-    )
-    banded = sig.selectExpr(
-        "doc_id", "sig", f"explode(array({slices})) AS bs"
-    ).selectExpr("doc_id", "sig", "bs.band AS band", "bs.bhash AS bhash")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bhash") == F.col("b.bhash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            round_half_up(
-                F.size(F.filter(F.zip_with("a.sig", "b.sig", lambda x, y: x == y), lambda eq: eq)).cast("double")
-                / F.lit(float(num_hashes))
-            ).alias("est_jaccard"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    return pairs.filter(F.col("est_jaccard") >= est_threshold)
+    return _lsh_pairs(sig, num_hashes, bands, est_threshold, "xxhash64({})")
 
 
 def embedding_near_dup(
@@ -505,21 +465,28 @@ def minhash_signatures_portable(
     return agg.selectExpr("doc_id", f"{sig} AS sig")
 
 
-def _banded_signatures(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+#: SQL template of a band's join key over its lane values: comma-joined
+#: strings, so no engine hash touches the key and an SQL oracle
+#: reproduces it
+_PORTABLE_BAND_KEY = "concat_ws(',', {})"
+
+
+def _banded_signatures(
+    sig: DataFrame, num_hashes: int, bands: int, key: str = _PORTABLE_BAND_KEY
+) -> DataFrame:
     """(doc_id, sig, band, bkey) LSH band table from a signature table:
-    band keys are the comma-joined lane values (pure string form — no
-    engine hash touches the join key). Map-side explode, `bands` rows
-    per doc. Shared by the self-join (J3 portable) and cross-corpus
-    (J42) candidate generators. Band slices rendered as one SQL string
-    (r13 — py4j build cost)."""
+    ``key`` renders a band's lane values into its join key. Map-side
+    explode, `bands` rows per doc. Shared by the self-join (J3) and
+    cross-corpus (J42) candidate generators. Band slices rendered as one
+    SQL string (r13 — py4j build cost)."""
     rows_per_band = num_hashes // bands
     slices = ", ".join(
-        "struct({band} AS band, concat_ws(',', {vals}) AS bkey)".format(
+        "struct({band} AS band, {bkey} AS bkey)".format(
             band=i,
-            vals=", ".join(
+            bkey=key.format(", ".join(
                 f"element_at(sig, {i * rows_per_band + j + 1})"
                 for j in range(rows_per_band)
-            ),
+            )),
         )
         for i in range(bands)
     )
@@ -528,25 +495,17 @@ def _banded_signatures(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame
     ).selectExpr("doc_id", "sig", "bs.band AS band", "bs.bkey AS bkey")
 
 
-def minhash_lsh_candidates_portable(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-    est_threshold: float = 0.5,
-    spill_dir: str | None = None,
+def _lsh_pairs(
+    sig: DataFrame,
+    num_hashes: int,
+    bands: int,
+    est_threshold: float,
+    key: str = _PORTABLE_BAND_KEY,
 ) -> DataFrame:
-    """Oracle-parity twin of ``minhash_lsh_candidates``: identical
-    banded self-join plan over the portable signature table; band keys
-    are the comma-joined lane values (pure string form — no engine
-    hash touches the join key, so the DuckDB oracle reproduces the
-    candidate set exactly). Production keeps the xxhash64 form.
-    """
-    sig = minhash_signatures_portable(docs, text_col, id_col, num_hashes, shingle_k)
-    sig = stage_to_parquet(sig, "minhash_psig_", spill_dir)
-    banded = _banded_signatures(sig, num_hashes, bands)
+    """Banded self-join over a (doc_id, sig) signature table: pairs that
+    share any band key, deduplicated, with est_jaccard = fraction of
+    equal signature lanes, kept at est_jaccard >= est_threshold."""
+    banded = _banded_signatures(sig, num_hashes, bands, key)
     a = banded.alias("a")
     b = banded.alias("b")
     pairs = (
@@ -567,6 +526,25 @@ def minhash_lsh_candidates_portable(
         .dropDuplicates(["doc_a", "doc_b"])
     )
     return pairs.filter(F.col("est_jaccard") >= est_threshold)
+
+
+def minhash_lsh_candidates_portable(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 16,
+    bands: int = 4,
+    shingle_k: int = 3,
+    est_threshold: float = 0.5,
+) -> DataFrame:
+    """Oracle-parity twin of ``minhash_lsh_candidates``: the same one
+    lazy banded self-join plan over the portable signature table; band
+    keys are the comma-joined lane values (pure string form — no engine
+    hash touches the join key, so the DuckDB oracle reproduces the
+    candidate set exactly). Production keeps the xxhash64 form.
+    """
+    sig = minhash_signatures_portable(docs, text_col, id_col, num_hashes, shingle_k)
+    return _lsh_pairs(sig, num_hashes, bands, est_threshold)
 
 
 _HEX_CHARS = "0123456789abcdef"
@@ -1160,9 +1138,12 @@ def dedup_verified_pairs(
     replaces at scale: the verify join fans out over CANDIDATE docs
     only, never corpus x corpus.
 
-    Plan shape: the portable signature/banding plan of
-    `minhash_lsh_candidates_portable` (staged to parquet, no cache
-    leak); verification joins the candidate pairs to the shingle table
+    Plan shape: the portable signatures are staged to parquet once
+    (no cache leak), then banded by the self-join of
+    `minhash_lsh_candidates_portable`. The candidates feed four
+    consumers below, each of which would otherwise recompute the
+    signatures, so here (unlike the one-plan candidate generators) the
+    stage pays for itself. Verification joins the candidate pairs to the shingle table
     twice (on doc_a, then on doc_b + equal shingle — the intersection
     count), set sizes from one per-doc aggregate of the same shingle
     table. Everything after candidate generation is
@@ -1170,10 +1151,12 @@ def dedup_verified_pairs(
 
     Returns (doc_a, doc_b, est_jaccard, jaccard) for verified pairs.
     """
-    cand = minhash_lsh_candidates_portable(
-        docs, text_col, id_col, num_hashes, bands, shingle_k,
-        est_threshold, spill_dir,
+    sig = stage_to_parquet(
+        minhash_signatures_portable(docs, text_col, id_col, num_hashes, shingle_k),
+        "minhash_psig_",
+        spill_dir,
     )
+    cand = _lsh_pairs(sig, num_hashes, bands, est_threshold)
     # (measured and REJECTED r14: staging `cand` itself to parquet —
     # it feeds four consumers which each replay the banded self-join
     # over the staged signatures, but the extra eager write job costs

@@ -23,6 +23,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -48,6 +49,31 @@ NANOS_TS_COLS: dict[str, tuple[str, ...]] = {
 }
 
 
+#: table path -> (its file versions, the schema inferred from them). A
+#: schema-less parquet read runs a schema-merge job; a read of unchanged
+#: files with the schema given runs none.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _file_versions(spark: SparkSession, path: str) -> tuple:
+    """(file, length, modification time) of a table path as the Hadoop
+    FileSystem reports them — every file under it for a directory — so
+    any rewrite that could change what inference finds changes the key,
+    for every URI scheme Spark reads."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    st = fs.getFileStatus(hpath)
+    if not st.isDirectory():
+        return ((path, st.getLen(), st.getModificationTime()),)
+    files = fs.listFiles(hpath, True)
+    out = []
+    while files.hasNext():
+        f = files.next()
+        out.append((f.getPath().toString(), f.getLen(), f.getModificationTime()))
+    return tuple(sorted(out))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Parquet timestamps written WITHOUT isAdjustedToUTC would otherwise
@@ -57,7 +83,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # end-to-end regardless of which session (ours or the harness's) runs
     # the query.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    versions = _file_versions(spark, path)
+    known, schema = _SCHEMAS.get(path, (None, None))
+    if known == versions:
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        _SCHEMAS[path] = (versions, df.schema)
     for col in NANOS_TS_COLS.get(name, ()):
         if dict(df.dtypes).get(col) == "bigint":
             # integer `div`, not `/`: double division of ~1.7e18 ns loses
@@ -135,13 +168,17 @@ def _staging_root() -> str:
 def stage_to_parquet(df: DataFrame, prefix: str, spill_dir: str | None = None) -> DataFrame:
     """Materialize a compact intermediate to parquet and read it back.
 
-    For intermediates feeding MULTIPLE consumers (self-joins, an
-    aggregate reused by a window and a scalar), Catalyst recomputes the
-    full upstream pipeline per consumer; staging cuts that to one
-    computation with no session-cache leak (unlike persist()), and it is
-    the literal 100 TB pattern — stage the small table, join against the
-    staged copy. NOTE: runs the upstream job EAGERLY at call time; the
-    caller's returned plan starts at the staged scan.
+    For intermediates feeding MULTIPLE queries or actions (a candidate
+    table whose consumers each run their own job, an iterative loop),
+    every job recomputes the full upstream pipeline; staging cuts that
+    to one computation with no session-cache leak (unlike persist()),
+    and it is the literal 100 TB pattern — stage the small table, join
+    against the staged copy. WITHIN one query it is not needed for
+    identical subtrees: Spark's exchange reuse already computes a
+    self-join's shared side once (a ReusedExchange in the executed
+    plan), so a one-plan query beats the eager write and read-back.
+    NOTE: runs the upstream job EAGERLY at call time; the caller's
+    returned plan starts at the staged scan.
 
     Every call writes a UNIQUE prefix-derived subdir under one
     process-scoped root (or under the caller's ``spill_dir``): the

@@ -5,10 +5,17 @@ Usage: python scripts/profile_queries.py [--sf DIR] [--reps N] [--plans OUTDIR] 
        python scripts/profile_queries.py --top N          # N slowest from bench_full.json
 
 For each query, in ONE warm session (same warm-up discipline as bench.py):
-  build  = Python DSL construction time (driver-side, no JVM jobs)
+  build  = query construction time: the Python DSL plus whatever Spark
+           jobs the builders run eagerly (schema inference, staging)
   plan   = analysis + optimization + physical planning (executedPlan force)
-  exec   = noop-sink materialization (median of reps, min in parens)
-Optionally dumps .explain("formatted") to --plans OUTDIR/<name>.txt.
+  exec   = noop-sink materialization of a built query (median of reps,
+           min in parens)
+and the number of Spark jobs each phase launches, counted from the
+status tracker under one job group per phase: `jobs=build:F,W plan:P
+exec:E` gives the first build's jobs (F; the first read of a table
+file infers its schema) and a warm rebuild's (W), then those of
+planning and of one exec rep. Optionally dumps .explain("formatted")
+to --plans OUTDIR/<name>.txt.
 
 This separates driver/Catalyst overhead from cluster execution — the
 split bench.py's single wall number cannot show (guide section 1).
@@ -31,6 +38,16 @@ def _median(samples: list[float]) -> float:
     s = sorted(samples)
     n = len(s)
     return s[n // 2] if n % 2 else round((s[n // 2 - 1] + s[n // 2]) / 2, 3)
+
+
+def _jobs_in(sc, group: str, fn):
+    """Run fn() under job group `group`; return (its value, jobs launched)."""
+    sc.setJobGroup(group, group)
+    try:
+        return fn(), len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def main() -> int:
@@ -75,14 +92,16 @@ def main() -> int:
             pass
         spark.catalog.clearCache()
 
+    sc = spark.sparkContext
     rows = []
     for name in names:
-        spark.sparkContext.setJobDescription(f"profile:{name}")
         t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
+        df, j_build = _jobs_in(sc, f"profile:{name}:build", lambda: QUERIES[name](spark, sf_dir))
         t_build = time.perf_counter() - t0
         t0 = time.perf_counter()
-        df._jdf.queryExecution().executedPlan()  # noqa: SLF001 - force planning
+        _, j_plan = _jobs_in(
+            sc, f"profile:{name}:plan", df._jdf.queryExecution().executedPlan  # noqa: SLF001
+        )
         t_plan = time.perf_counter() - t0
         if plans_dir:
             plan_txt = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
@@ -91,15 +110,22 @@ def main() -> int:
             with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
                 f.write(plan_txt)
         execs = []
-        for _ in range(reps):
+        for rep in range(reps):
+            q, j_warm = _jobs_in(
+                sc, f"profile:{name}:build{rep}", lambda: QUERIES[name](spark, sf_dir)
+            )
             t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            _, j_exec = _jobs_in(
+                sc, f"profile:{name}:exec{rep}",
+                q.write.format("noop").mode("overwrite").save,
+            )
             execs.append(round(time.perf_counter() - t0, 3))
             spark.catalog.clearCache()
         rows.append((name, t_build, t_plan, _median(execs), min(execs)))
         print(
             f"{name:34s} build={t_build:6.3f}s plan={t_plan:6.3f}s "
-            f"exec_med={_median(execs):6.3f}s exec_min={min(execs):6.3f}s n={reps}",
+            f"exec_med={_median(execs):6.3f}s exec_min={min(execs):6.3f}s n={reps} "
+            f"jobs=build:{j_build},{j_warm} plan:{j_plan} exec:{j_exec}",
             flush=True,
         )
     total = sum(r[3] for r in rows)

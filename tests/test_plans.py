@@ -173,15 +173,19 @@ def test_scalar_hot_path_is_whole_stage_codegen(spark, sf_smoke):
 
 
 def test_staged_pipelines_upstream_plans_are_clean(spark, sf_smoke):
-    # q_minhash_lsh / q_tf_idf / q_bm25 stage a compact intermediate to
-    # parquet EAGERLY, so the repo-wide gate below only ever sees their
-    # post-staging sub-plan. Assert the pre-staging pipelines directly:
-    # a pathology introduced upstream of the stage must not hide.
+    # q_tf_idf / q_bm25 stage a compact intermediate to parquet EAGERLY,
+    # so the repo-wide gate below only ever sees their post-staging
+    # sub-plan. Assert the pre-staging pipelines directly: a pathology
+    # introduced upstream of the stage must not hide. q_minhash_lsh is
+    # one lazy plan now, so the gate sees its signature pipeline; it
+    # keeps its direct check here beside the portable signatures that
+    # q_dedup_pipeline still stages.
     import contextlib
     import io
 
     from azure_iot_realtime_data_pipeline_spark.operators.dedup import (
         minhash_signatures,
+        minhash_signatures_portable,
     )
     from azure_iot_realtime_data_pipeline_spark.operators.relevance import (
         term_frequencies,
@@ -189,7 +193,11 @@ def test_staged_pipelines_upstream_plans_are_clean(spark, sf_smoke):
     from azure_iot_realtime_data_pipeline_spark.sources.batch import load_table
 
     docs = load_table(spark, sf_smoke, "documents")
-    for upstream in (minhash_signatures(docs), term_frequencies(docs)):
+    for upstream in (
+        minhash_signatures(docs),
+        minhash_signatures_portable(docs),
+        term_frequencies(docs),
+    ):
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             upstream.explain(mode="formatted")
