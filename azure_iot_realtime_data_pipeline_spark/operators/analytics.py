@@ -1826,16 +1826,13 @@ def lorenz_curve(
     from azure_iot_realtime_data_pipeline_spark.operators.ordering import (
         global_rank_and_cumsum,
     )
-    from azure_iot_realtime_data_pipeline_spark.sources.batch import (
-        stage_to_parquet,
-    )
 
-    # stage ONCE: the two primitives each run a quantile pass and a
+    # materialize ONCE: the two primitives each run a quantile pass and a
     # bucket-stats pass, and the totals aggregate is a fifth consumer —
-    # without staging every one of them recomputes the caller's full
-    # upstream lineage (the review-measured 5x scan bill)
-    base = stage_to_parquet(
-        spend.select(F.col(key), F.col(value_col).alias("_v")), "lorenz_spend_"
+    # without the checkpoint every one of them recomputes the caller's
+    # full upstream lineage (the review-measured 5x scan bill)
+    base = spend.select(F.col(key), F.col(value_col).alias("_v")).localCheckpoint(
+        eager=True
     )
     # fused rank+cumsum (r13): one quantile pass, one bucket-stats
     # collect and one window sort instead of two of each — values

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from azure_iot_realtime_data_pipeline_spark.functions.rounding import round_half_up
 
 from azure_iot_realtime_data_pipeline_spark.operators.text import tokens
-from azure_iot_realtime_data_pipeline_spark.sources.batch import ensure_parallelism, stage_to_parquet
+from azure_iot_realtime_data_pipeline_spark.sources.batch import ensure_parallelism
 
 MERSENNE_31 = 2_147_483_647  # 2^31 - 1
 
@@ -656,11 +656,12 @@ def duplicate_clusters(
     hash aggregate — all-shuffle-on-key, no driver data. Lineage is
     truncated per round (localCheckpoint) — without it the iterative
     plan doubles each round and analysis cost explodes; convergence is
-    detected with a bounded count(changed) job. At 100 TB scale the
-    same loop runs with the label table staged to storage per round
-    (stage_to_parquet) and the classic large-star/small-star
-    optimization halves round count; diameters of near-dup graphs are
-    tiny in practice (dup sets are cliques or near-cliques from LSH).
+    detected with a bounded count(changed) job. At 100 TB scale the same
+    loop checkpoints the label table to reliable storage per round
+    (`checkpoint()`, which survives an executor loss) and the classic
+    large-star/small-star optimization halves round count; diameters of
+    near-dup graphs are tiny in practice (dup sets are cliques or
+    near-cliques from LSH).
     MEASURED (round 3) on the real MinHash-LSH candidate graphs: sf0.01
     = 30 edges / 26 components, converges in 2 rounds; sf0.1 = 729
     edges / 237 components, 3 rounds. Large-star/small-star would save
@@ -889,7 +890,6 @@ def semantic_dedup(
     n_cells: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """J38 SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space, compare pairs ONLY
@@ -908,14 +908,15 @@ def semantic_dedup(
 
     Scale shape: centroid assignment is the bit-pinned map-side numpy
     argmin shared with IVF (`similarity.assign_to_centroids` — zero
-    shuffle, drops NULL/zero-norm vectors); the assigned table stages to
-    parquet ONCE (self-join would otherwise recompute the assignment
-    per side); the within-cell pair generation is a plain equi-join on
-    cell_id. Cells are the parallelism AND cost unit: within-cell pairs
-    are quadratic in cell size, so n_cells must grow with the corpus
-    (SemDeDup uses ~100k clusters at web scale; 16 here matches the
-    oracle-able IVF deterministic centroid table). Deterministic
-    lowest-id centroids keep the whole operator SQL-oracle-able; swap
+    shuffle, drops NULL/zero-norm vectors); the assigned table is
+    materialized ONCE (`localCheckpoint(eager=True)`: the self-join
+    would otherwise recompute the assignment per side); the within-cell
+    pair generation is a plain equi-join on cell_id. Cells are the
+    parallelism AND cost unit: within-cell pairs are quadratic in cell
+    size, so n_cells must grow with the corpus (SemDeDup uses ~100k
+    clusters at web scale; 16 here matches the oracle-able IVF
+    deterministic centroid table). Deterministic lowest-id centroids
+    keep the whole operator SQL-oracle-able; swap
     `similarity._kmeans_centroids` for the production centroid fit
     exactly as ivf_topk does.
 
@@ -928,10 +929,8 @@ def semantic_dedup(
     )
 
     cent_lits = deterministic_centroids(emb, id_col, vec_col, n_cells)
-    assigned = stage_to_parquet(
-        assign_to_centroids(emb, cent_lits, id_col, vec_col),
-        "semdedup_cells_",
-        spill_dir,
+    assigned = assign_to_centroids(emb, cent_lits, id_col, vec_col).localCheckpoint(
+        eager=True
     )
     a = assigned.select(
         F.col(id_col).alias("id_a"),
@@ -978,7 +977,6 @@ def minhash_dedup_incremental(
     bands: int = 4,
     shingle_k: int = 3,
     est_threshold: float = 0.5,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """J42 incremental-corpus dedup: drop each NEW-batch doc whose
     MinHash bands collide with an EXISTING corpus doc at estimated
@@ -987,13 +985,13 @@ def minhash_dedup_incremental(
     decontamination (J20).
 
     Scale shape — and the point of the incremental pattern: the CORPUS
-    signature table is computed once and STORED (staged to parquet
-    here; a real deployment keeps it as a bucketed table keyed on
-    (band, bkey), sources/bucketed.py); each new batch then pays only
-    |batch| signature computation plus a banded equi-join against the
-    stored table. Corpus x corpus never happens, and the corpus text
-    itself is never re-read. The NEW side is small by definition, so
-    the band join broadcasts it.
+    signature table is computed once and STORED (checkpointed here with
+    `localCheckpoint(eager=True)`; a real deployment keeps it as a
+    bucketed table keyed on (band, bkey), sources/bucketed.py); each new
+    batch then pays only |batch| signature computation plus a banded
+    equi-join against the stored table. Corpus x corpus never happens,
+    and the corpus text itself is never re-read. The NEW side is small
+    by definition, so the band join broadcasts it.
 
     Within-batch duplicates are out of scope by design — run J3/J26 on
     the batch first; this operator answers "is it already IN the
@@ -1008,11 +1006,9 @@ def minhash_dedup_incremental(
     nsig = minhash_signatures_portable(
         new_docs, text_col, id_col, num_hashes, shingle_k
     )
-    csig = stage_to_parquet(
-        minhash_signatures_portable(corpus, text_col, id_col, num_hashes, shingle_k),
-        "minhash_corpus_sig_",
-        spill_dir,
-    )
+    csig = minhash_signatures_portable(
+        corpus, text_col, id_col, num_hashes, shingle_k
+    ).localCheckpoint(eager=True)
     nb = _banded_signatures(nsig, num_hashes, bands).select(
         F.col("doc_id").alias("_nid"), F.col("sig").alias("_nsig"), "band", "bkey"
     )
@@ -1126,7 +1122,6 @@ def dedup_verified_pairs(
     shingle_k: int = 3,
     est_threshold: float = 0.3,
     verify_threshold: float = 0.5,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """J52 candidate-then-verify dedup pipeline (chain #6) — the full
     production shape every large-scale near-dup system runs (Lee et al.
@@ -1138,30 +1133,28 @@ def dedup_verified_pairs(
     replaces at scale: the verify join fans out over CANDIDATE docs
     only, never corpus x corpus.
 
-    Plan shape: the portable signatures are staged to parquet once
-    (no cache leak), then banded by the self-join of
+    Plan shape: the portable signatures are computed once
+    (`localCheckpoint(eager=True)`), then banded by the self-join of
     `minhash_lsh_candidates_portable`. The candidates feed four
     consumers below, each of which would otherwise recompute the
     signatures, so here (unlike the one-plan candidate generators) the
-    stage pays for itself. Verification joins the candidate pairs to the shingle table
-    twice (on doc_a, then on doc_b + equal shingle — the intersection
-    count), set sizes from one per-doc aggregate of the same shingle
-    table. Everything after candidate generation is
+    checkpoint pays for itself. Verification joins the candidate pairs
+    to the shingle table twice (on doc_a, then on doc_b + equal shingle
+    — the intersection count), set sizes from one per-doc aggregate of
+    the same shingle table. Everything after candidate generation is
     candidate-set-sized.
 
     Returns (doc_a, doc_b, est_jaccard, jaccard) for verified pairs.
     """
-    sig = stage_to_parquet(
-        minhash_signatures_portable(docs, text_col, id_col, num_hashes, shingle_k),
-        "minhash_psig_",
-        spill_dir,
-    )
+    sig = minhash_signatures_portable(
+        docs, text_col, id_col, num_hashes, shingle_k
+    ).localCheckpoint(eager=True)
     cand = _lsh_pairs(sig, num_hashes, bands, est_threshold)
     # (measured and REJECTED r14: staging `cand` itself to parquet —
     # it feeds four consumers which each replay the banded self-join
-    # over the staged signatures, but the extra eager write job costs
-    # more than the replays at any scale where the candidate join is
-    # already signature-staged: interleaved A/B med 3.39 vs 2.65 s.)
+    # over the materialized signatures, but the extra eager write job
+    # costs more than the replays once the signatures are materialized:
+    # interleaved A/B med 3.39 vs 2.65 s.)
     # restrict the corpus to CANDIDATE docs before anything else: the
     # verify stage only ever needs their shingles. r14 moves the semi
     # join BELOW the shingle fan-out (filter docs first, THEN explode —

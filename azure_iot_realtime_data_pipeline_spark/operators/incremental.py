@@ -21,11 +21,12 @@ and for bounded pages, not as a 100 TB access path.
 
 from __future__ import annotations
 
-import os
-from datetime import datetime
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from azure_iot_realtime_data_pipeline_spark.sources.batch import _read_table, _to_micros
 
 
 def incremental_tail(df: DataFrame, ts_col: str, watermark: str | datetime) -> DataFrame:
@@ -52,26 +53,18 @@ def incremental_tail_scan(
     against the watermark-in-nanos pushes a plain bigint range predicate
     into the scan — parquet row-group stats skip old data entirely, the
     100 TB difference between reading nothing and reading everything.
-    The conversion to TimestampType happens after the filter.
+    The read is `load_table`'s (same confs, same schema memo) and the
+    conversion to TimestampType, `load_table`'s too, happens after the
+    filter.
     """
-    from datetime import timezone
-
-    from azure_iot_realtime_data_pipeline_spark.sources.batch import NANOS_TS_COLS
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # see sources/batch.py:load_table — read un-adjusted parquet
-    # timestamps as TIMESTAMP (UTC session), not TIMESTAMP_NTZ, so the
-    # pushed range predicate and the downstream plan see one type.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    wm = datetime.fromisoformat(watermark).replace(tzinfo=timezone.utc)
+    df = _read_table(spark, sf_dir, name)
     if dict(df.dtypes).get(ts_col) == "bigint":
+        wm = datetime.fromisoformat(watermark).replace(tzinfo=timezone.utc)
         wm_nanos = int(wm.timestamp()) * 1_000_000_000 + wm.microsecond * 1_000
         df = df.filter(F.col(ts_col) > F.lit(wm_nanos))
-        for col in NANOS_TS_COLS.get(name, ()):
-            df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
-        return df
-    return df.filter(F.col(ts_col) > F.lit(watermark).cast("timestamp"))
+    else:
+        df = incremental_tail(df, ts_col, watermark)
+    return _to_micros(df, name)
 
 
 def offset_fetch(df: DataFrame, order_cols: list[str], offset: int, fetch: int) -> DataFrame:

@@ -26,13 +26,7 @@ from pyspark.sql import functions as F
 
 from azure_iot_realtime_data_pipeline_spark.functions.rounding import round_half_up
 from azure_iot_realtime_data_pipeline_spark.operators.text import tokens
-from azure_iot_realtime_data_pipeline_spark.sources.batch import ensure_parallelism, stage_to_parquet
-
-# The (doc, term, tf) table feeds 2-3 downstream consumers (df_t
-# aggregate, dl window, corpus scalars); without staging Catalyst
-# recomputes the corpus explode per consumer (verified in the physical
-# plan: two full explode+aggregate branches under the join).
-_stage = stage_to_parquet
+from azure_iot_realtime_data_pipeline_spark.sources.batch import ensure_parallelism
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -41,7 +35,13 @@ BM25_B = 0.75
 def term_frequencies(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(doc_id, term, tf) — one row per distinct term per doc."""
+    """(doc_id, term, tf) — one row per distinct term per doc.
+
+    tf_idf and bm25 materialize it with `localCheckpoint(eager=True)`:
+    it feeds 2-3 consumers (df_t aggregate, dl window, corpus scalars),
+    and without the checkpoint Catalyst recomputes the corpus explode
+    per consumer (verified in the physical plan: two full
+    explode+aggregate branches under the join)."""
     return (
         docs.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term"))
         .groupBy(id_col, "term")
@@ -53,12 +53,11 @@ def tf_idf(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """J24a: smoothed TF-IDF — tf * (ln((N+1)/(df+1)) + 1), rounded to 4
     decimals. Returns (doc_id, term, tf, tf_idf)."""
     n_docs = docs.count()  # scalar; O(1) rows to the driver
-    tf = _stage(term_frequencies(docs, text_col, id_col), "tfidf_tf_", spill_dir)
+    tf = term_frequencies(docs, text_col, id_col).localCheckpoint(eager=True)
     df_t = tf.groupBy("term").agg(F.count("*").alias("df"))
     idf = F.log((F.lit(float(n_docs + 1))) / (F.col("df") + 1)) + 1.0
     return (
@@ -78,7 +77,6 @@ def bm25(
     id_col: str = "doc_id",
     k1: float = BM25_K1,
     b: float = BM25_B,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """J24b: Okapi BM25 term weight per (doc, term), rounded to 4
     decimals. idf = ln(1 + (N - df + 0.5)/(df + 0.5)); the doc-length
@@ -92,7 +90,7 @@ def bm25(
     from pyspark.sql import Window
 
     n_docs = docs.count()  # scalar
-    tf = _stage(term_frequencies(docs, text_col, id_col), "bm25_tf_", spill_dir)
+    tf = term_frequencies(docs, text_col, id_col).localCheckpoint(eager=True)
     total_tokens = tf.agg(F.sum("tf")).collect()[0][0]  # scalar
     avgdl = float(total_tokens) / float(n_docs)
     dl = F.sum("tf").over(Window.partitionBy(id_col))

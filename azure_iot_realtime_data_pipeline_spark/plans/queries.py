@@ -2836,8 +2836,8 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J42 incremental-corpus dedup: the odd-id docs play the daily
     crawl batch, the even-id docs the stored corpus — new docs whose
     MinHash bands collide with a corpus doc at est Jaccard >= 0.5 are
-    dropped. The corpus signature table is computed once and staged
-    (stored, in production); corpus x corpus never happens."""
+    dropped. The corpus signature table is computed once and
+    checkpointed (stored, in production); corpus x corpus never happens."""
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)

@@ -6,20 +6,19 @@ event_id / ts / user_id / event_type / value / props(JSON string) play
 the roles of a telemetry message's id / enqueuedTime / deviceId /
 sensor-name / reading / payload.
 
-Scan-path notes for 100 TB: everything below is a plain
+Scan-path notes for 100 TB: every table read in the package goes
+through `_read_table` (`load_table`, and `incremental_tail_scan`, which
+filters the stored int64 nanos before `_to_micros`), a plain
 ``spark.read.parquet`` so Catalyst's data-source V2 path gives predicate
 pushdown, column pruning, and partition pruning for free; callers must
 keep filters/selects declarative (no ``collect()`` then filter) so they
-reach the scan.
+reach the scan. Nothing here writes: an intermediate that feeds several
+jobs is materialized by its operator with ``localCheckpoint(eager=True)``.
 """
 
 from __future__ import annotations
 
-import atexit
-import itertools
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,7 +73,9 @@ def _file_versions(spark: SparkSession, path: str) -> tuple:
     return tuple(sorted(out))
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The table as stored: nano-stamped columns stay int64 nanos, so a
+    caller can filter them in the stored domain before `_to_micros`."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Parquet timestamps written WITHOUT isAdjustedToUTC would otherwise
     # infer as TIMESTAMP_NTZ (Spark 4 default), which rejects double casts
@@ -87,16 +88,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     versions = _file_versions(spark, path)
     known, schema = _SCHEMAS.get(path, (None, None))
     if known == versions:
-        df = spark.read.schema(schema).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        _SCHEMAS[path] = (versions, df.schema)
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (versions, df.schema)
+    return df
+
+
+def _to_micros(df: DataFrame, name: str) -> DataFrame:
+    """Floor the table's int64-nanos columns to microsecond timestamps."""
     for col in NANOS_TS_COLS.get(name, ()):
         if dict(df.dtypes).get(col) == "bigint":
             # integer `div`, not `/`: double division of ~1.7e18 ns loses
             # sub-µs bits and floors the wrong way by 1 µs
             df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return _to_micros(_read_table(spark, sf_dir, name), name)
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -150,43 +159,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs
-
-
-_STAGE_ROOT: str | None = None
-_STAGE_SEQ = itertools.count()
-
-
-def _staging_root() -> str:
-    """One process-scoped staging root, removed at interpreter exit."""
-    global _STAGE_ROOT
-    if _STAGE_ROOT is None:
-        _STAGE_ROOT = tempfile.mkdtemp(prefix="spark_stage_")
-        atexit.register(shutil.rmtree, _STAGE_ROOT, ignore_errors=True)
-    return _STAGE_ROOT
-
-
-def stage_to_parquet(df: DataFrame, prefix: str, spill_dir: str | None = None) -> DataFrame:
-    """Materialize a compact intermediate to parquet and read it back.
-
-    For intermediates feeding MULTIPLE queries or actions (a candidate
-    table whose consumers each run their own job, an iterative loop),
-    every job recomputes the full upstream pipeline; staging cuts that
-    to one computation with no session-cache leak (unlike persist()),
-    and it is the literal 100 TB pattern — stage the small table, join
-    against the staged copy. WITHIN one query it is not needed for
-    identical subtrees: Spark's exchange reuse already computes a
-    self-join's shared side once (a ReusedExchange in the executed
-    plan), so a one-plan query beats the eager write and read-back.
-    NOTE: runs the upstream job EAGERLY at call time; the caller's
-    returned plan starts at the staged scan.
-
-    Every call writes a UNIQUE prefix-derived subdir under one
-    process-scoped root (or under the caller's ``spill_dir``): the
-    previous one-mkdtemp-per-call form registered an atexit entry per
-    invocation and leaked a staged copy per bench/parity rerun, and two
-    stages handed the same ``spill_dir`` silently clobbered each other.
-    """
-    root = spill_dir if spill_dir is not None else _staging_root()
-    path = os.path.join(root, f"{prefix}{next(_STAGE_SEQ)}")
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)

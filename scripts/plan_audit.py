@@ -7,6 +7,13 @@ whole-stage codegen covers the scalar path, scan pushdown/pruning
 markers, and Python (Arrow) stages. The per-query plan-gate tests pin
 the critical shapes; this report makes the WHOLE surface reviewable at
 a glance — the 'explain and iterate' loop, institutionalized.
+
+The profile is of the STATIC plan, before execution: a subtree that
+appears twice (both sides of a self-join, a repeated aggregate) is
+counted twice, although the executed plan computes it once and reads it
+back as a ReusedExchange. So `exch` over-counts the exchanges a query
+runs; compare `queryExecution().executedPlan()` after an action for the
+executed count.
 """
 
 from __future__ import annotations
@@ -63,7 +70,10 @@ def main() -> int:
         "scan-level pushed filters. Repo invariants (plan-gated in",
         "tests/test_plans.py): zero CartesianProduct, zero SortMergeJoin,",
         "single-partition exchanges only in the sanctioned",
-        "reference-faithful global window.",
+        "reference-faithful global window. Counts are of the static",
+        "pre-execution plan: an exchange the executed plan reuses",
+        "(ReusedExchange, e.g. a self-join's second side) is counted",
+        "again, so `exch` over-counts what a query runs.",
         "",
         "| query | exch | 1part | BHJ | SMJ | BNLJ | codegen | arrowPy | pushdown |",
         "|---|---|---|---|---|---|---|---|---|",

@@ -6,7 +6,8 @@ Usage: python scripts/profile_queries.py [--sf DIR] [--reps N] [--plans OUTDIR] 
 
 For each query, in ONE warm session (same warm-up discipline as bench.py):
   build  = query construction time: the Python DSL plus whatever Spark
-           jobs the builders run eagerly (schema inference, staging)
+           jobs the builders run eagerly (a first read's schema
+           inference, eager `localCheckpoint`s, driver-side scalars)
   plan   = analysis + optimization + physical planning (executedPlan force)
   exec   = noop-sink materialization of a built query (median of reps,
            min in parens)

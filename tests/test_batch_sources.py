@@ -1,5 +1,6 @@
 """`load_table`'s schema memo: a table file's schema is inferred once
-per file version, and a rewritten file is read with its new schema."""
+per file version, and a rewritten file is read with its new schema.
+`incremental_tail_scan` reads through the same memo."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from azure_iot_realtime_data_pipeline_spark.operators.incremental import incremental_tail_scan
 from azure_iot_realtime_data_pipeline_spark.sources.batch import load_table
 
 
@@ -29,6 +31,20 @@ def test_second_load_of_an_unchanged_file_runs_no_job(spark, sf_smoke, tmp_path)
     shutil.copy(os.path.join(sf_smoke, "events.parquet"), tmp_path / "events.parquet")
     first, first_jobs = _jobs(spark, "load-first", lambda: load_table(spark, str(tmp_path), "events"))
     again, again_jobs = _jobs(spark, "load-again", lambda: load_table(spark, str(tmp_path), "events"))
+    assert first_jobs, "the first read infers the schema"
+    assert again_jobs == []
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_second_tail_scan_of_an_unchanged_file_runs_no_job(spark, sf_smoke, tmp_path):
+    shutil.copy(os.path.join(sf_smoke, "events.parquet"), tmp_path / "events.parquet")
+
+    def scan():
+        return incremental_tail_scan(spark, str(tmp_path), "events", "ts", "2024-01-25 00:00:00")
+
+    first, first_jobs = _jobs(spark, "tail-first", scan)
+    again, again_jobs = _jobs(spark, "tail-again", scan)
     assert first_jobs, "the first read infers the schema"
     assert again_jobs == []
     assert again.schema == first.schema

@@ -17,7 +17,7 @@ from azure_iot_realtime_data_pipeline_spark.operators.windows import (
     trailing_window,
     with_epoch_seconds,
 )
-from azure_iot_realtime_data_pipeline_spark.sources.batch import load_table, stage_to_parquet
+from azure_iot_realtime_data_pipeline_spark.sources.batch import load_table
 from azure_iot_realtime_data_pipeline_spark.streaming.anomaly import spike_dip_stream
 from azure_iot_realtime_data_pipeline_spark.streaming.source import (
     replay_events,
@@ -85,7 +85,7 @@ def test_minhash_lsh_candidates_is_one_lazy_plan(spark, sf_smoke):
     """Building the candidates runs no Spark job; the executed plan
     computes the signature aggregate once (the self-join's second side
     reads the first side's exchange back); and the candidate set equals
-    the one banded from a staged signature table."""
+    the one banded from a materialized signature table."""
     docs = load_table(spark, sf_smoke, "documents")
     sc = spark.sparkContext
     sc.setJobGroup("minhash-build", "build only")
@@ -99,7 +99,7 @@ def test_minhash_lsh_candidates_is_one_lazy_plan(spark, sf_smoke):
     final = cand._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
     assert "ReusedExchange" in final, final
     assert final.count("FileScan parquet") == 1, final
-    staged = stage_to_parquet(dedup.minhash_signatures(docs), "test_minhash_sig_")
+    staged = dedup.minhash_signatures(docs).localCheckpoint(eager=True)
     want = {
         tuple(r)
         for r in dedup._lsh_pairs(staged, 32, 8, 0.5, "xxhash64({})").collect()

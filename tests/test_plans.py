@@ -173,13 +173,14 @@ def test_scalar_hot_path_is_whole_stage_codegen(spark, sf_smoke):
 
 
 def test_staged_pipelines_upstream_plans_are_clean(spark, sf_smoke):
-    # q_tf_idf / q_bm25 stage a compact intermediate to parquet EAGERLY,
-    # so the repo-wide gate below only ever sees their post-staging
-    # sub-plan. Assert the pre-staging pipelines directly: a pathology
-    # introduced upstream of the stage must not hide. q_minhash_lsh is
-    # one lazy plan now, so the gate sees its signature pipeline; it
-    # keeps its direct check here beside the portable signatures that
-    # q_dedup_pipeline still stages.
+    # q_tf_idf / q_bm25 materialize a compact intermediate EAGERLY
+    # (localCheckpoint(eager=True)), so the repo-wide gate below only
+    # ever sees their post-checkpoint sub-plan. Assert the
+    # pre-checkpoint pipelines directly: a pathology introduced upstream
+    # of the checkpoint must not hide. q_minhash_lsh is one lazy plan
+    # now, so the gate sees its signature pipeline; it keeps its direct
+    # check here beside the portable signatures that q_dedup_pipeline
+    # still checkpoints.
     import contextlib
     import io
 
@@ -207,6 +208,21 @@ def test_staged_pipelines_upstream_plans_are_clean(spark, sf_smoke):
         assert "SortMergeJoin" not in p, p
         # the aggregate must combine map-side before the exchange
         assert len(re.findall(r"\bHashAggregate\b", p)) >= 2, p
+
+
+def test_tf_idf_reads_its_checkpointed_tf_table(spark, sf_smoke):
+    # the (doc, term, tf) table is materialized in block storage, not
+    # written to a staged parquet copy and read back: the built plan's
+    # leaves are the checkpoint's RDD scans, with no file scan at all.
+    from azure_iot_realtime_data_pipeline_spark.operators.relevance import tf_idf
+    from azure_iot_realtime_data_pipeline_spark.sources.batch import load_table
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        tf_idf(load_table(spark, sf_smoke, "documents")).explain(mode="formatted")
+    p = buf.getvalue()
+    assert "Scan ExistingRDD" in p, p
+    assert "FileScan parquet" not in p, p
 
 
 def test_kmv_caps_state_before_the_shuffle(spark, sf_smoke):
